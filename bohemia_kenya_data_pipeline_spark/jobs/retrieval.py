@@ -12,6 +12,9 @@ partition-pruned-read contract as ``write_history_partition``).
 
 Centroids persist in a sidecar dataset next to the index so a query
 job needs no training state — the index directory is self-describing.
+Sidecars (centroids, PQ codebooks, tombstones) are metadata-sized: each
+call reads them once on the driver (:func:`_read_sidecar`, pyarrow on
+local paths — no Spark job) and hands them to the plan as literals.
 
 Query results are IDENTICAL to :func:`..operators.similarity.ivf_topk`
 with the same centroids/n_probe (exact-parity golden): the pruned scan
@@ -21,11 +24,14 @@ the stored vectors is deterministic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import os
+
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators import similarity as sim
-from ..operators.skipping import _swap_in
+from ..operators.skipping import _local_root, _swap_in, _walk_local_files
 from ..session import local_df, parquet_scan, _local_footer_schema
 
 
@@ -156,14 +162,43 @@ def build_ann_index(
     return centroids
 
 
+def _read_sidecar(spark: SparkSession, path: str, ddl: str) -> list[tuple] | None:
+    """Rows of a metadata-sized sidecar dataset, or ``None`` when it
+    does not exist. A local path (the ``skipping._local_root`` seam
+    that ``session.parquet_scan`` uses) is read in-process with
+    pyarrow: no Spark job and no footer-inference pass. Hidden files
+    and directories (``_SUCCESS``, ``.crc``, ``_temporary``) are
+    skipped, as Spark's file index skips them. Any other filesystem
+    takes one explicit-schema (``ddl``) Spark read."""
+    names = T.StructType.fromDDL(ddl).fieldNames()
+    local = _local_root(path, spark)
+    if local is None:
+        jvm = spark.sparkContext._jvm
+        p = jvm.org.apache.hadoop.fs.Path(path)
+        if not p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p):
+            return None
+        return [tuple(r) for r in spark.read.schema(ddl).parquet(path).collect()]
+    if not os.path.isdir(local):
+        return None
+    import pyarrow.parquet as pq
+
+    rows: list[tuple] = []
+    for f, _, _ in sorted(_walk_local_files(local)):
+        if any(p.startswith(("_", ".")) for p in os.path.relpath(f, local).split(os.sep)):
+            continue
+        t = pq.read_table(f, columns=names)
+        rows.extend(zip(*(t.column(n).to_pylist() for n in names)))
+    return rows
+
+
 def load_ann_centroids(spark: SparkSession, index_path: str) -> list[list[float]]:
     """Centroids from the index sidecar, in cid order."""
-    # explicit schema (matches the writer above): a serving query
-    # should not pay a footer-inference listing per call
-    rows = spark.read.schema("cid INT, cv ARRAY<DOUBLE>").parquet(
-        _centroid_sidecar(index_path)
-    ).collect()
-    return [list(r.cv) for r in sorted(rows, key=lambda r: r.cid)]
+    rows = _read_sidecar(
+        spark, _centroid_sidecar(index_path), "cid INT, cv ARRAY<DOUBLE>"
+    )
+    if rows is None:
+        raise FileNotFoundError(f"no centroid sidecar for index {index_path}")
+    return [list(cv) for _, cv in sorted(rows)]
 
 
 def query_ann_index(
@@ -183,26 +218,14 @@ def query_ann_index(
     dot desc, cid asc — same exact-cosine scoring, self-exclusion,
     rounding and tie-break)."""
     centroids = load_ann_centroids(spark, index_path)
-    cents = sim._centroid_literal(centroids)
-    # same probe expression as ivf_topk (parity-tested): sort
-    # (neg-dot, cid) structs, slice n_probe
-    probes = F.slice(
-        F.sort_array(
-            F.transform(
-                cents,
-                lambda ce: F.struct(
-                    (-sim.dot(F.col("qv"), ce["cv"])).alias("d"),
-                    ce["cid"].alias("cid"),
-                ),
-            )
-        ),
-        1,
-        n_probe,
+    # same probe expression as ivf_topk (parity-tested)
+    probes = sim._probe_cids_sql(
+        "`qv`", sim._centroid_literal_sql(centroids), n_probe
     )
     probed = (
         sim._drop_null_vecs(queries, vec_col)
         .select(sim._as_double(vec_col).alias("qv"))
-        .select(F.explode(F.transform(probes, lambda p: p["cid"])).alias("cid"))
+        .select(F.explode(F.expr(probes)).alias("cid"))
         .distinct()
         .collect()
     )
@@ -231,13 +254,45 @@ def _tombstone_sidecar(index_path: str) -> str:
     return index_path.rstrip("/") + "__tombstones"
 
 
-def _index_tombstones(spark: SparkSession, index_path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(_tombstone_sidecar(index_path))
-    if not p.getFileSystem(conf).exists(p):
+def _index_tombstones(
+    spark: SparkSession, index_path: str, id_type: T.DataType
+) -> list | None:
+    """The index's deleted ids as a sorted, distinct driver-side list,
+    or ``None`` when no delete has landed since the last compaction.
+    Tombstones are metadata-sized: :func:`_read_sidecar` reads them
+    with no schema-inference job and no ``distinct()`` shuffle (the
+    set is built here). ``id_type`` is the index's id column type (the
+    explicit schema of a non-local read). NULL ids never match an
+    anti-join, so they are dropped."""
+    rows = _read_sidecar(
+        spark, _tombstone_sidecar(index_path), f"id {id_type.simpleString()}"
+    )
+    if rows is None:
         return None
-    return spark.read.parquet(_tombstone_sidecar(index_path)).select("id").distinct()
+    return sorted({r[0] for r in rows if r[0] is not None})
+
+
+#: "not read yet" marker for the tombstone argument of the helpers
+#: below (``None`` means "read, and there are none")
+_UNREAD = object()
+
+
+def _tombstones_for(spark, index_path: str, scan: DataFrame, id_col: str, tombs):
+    if tombs is _UNREAD:
+        return _index_tombstones(spark, index_path, scan.schema[id_col].dataType)
+    return tombs
+
+
+def _tomb_frame(spark, tombs: list, id_type: T.DataType, name: str) -> DataFrame:
+    """Tombstones as a literal ``(name, __dead)`` frame (``__dead`` = 1)
+    for a broadcast anti-join or live-flag left join."""
+    return local_df(
+        spark,
+        [(i, 1) for i in tombs],
+        T.StructType(
+            [T.StructField(name, id_type), T.StructField("__dead", T.IntegerType())]
+        ),
+    )
 
 
 def delete_from_index(
@@ -260,13 +315,26 @@ def delete_from_index(
     ).parquet(_tombstone_sidecar(index_path))
 
 
-def _drop_tombstoned(scan: DataFrame, spark, index_path: str, id_col: str):
-    tomb = _index_tombstones(spark, index_path)
-    if tomb is None:
+def _flag_tombstoned(df: DataFrame, spark, id_col: str, tombs) -> DataFrame:
+    """``df`` plus ``__dead`` (1 for a tombstoned id, else NULL): a
+    broadcast left join against the literal tombstone frame."""
+    if not tombs:
+        return df.withColumn("__dead", F.lit(None).cast("int"))
+    dead = _tomb_frame(spark, tombs, df.schema[id_col].dataType, id_col)
+    return df.join(F.broadcast(dead), id_col, "left")
+
+
+def _drop_tombstoned(
+    scan: DataFrame, spark, index_path: str, id_col: str, tombs=_UNREAD
+) -> DataFrame:
+    """``scan`` minus the tombstoned ids: a broadcast anti-join against
+    the literal tombstone frame. ``tombs`` is a list already read this
+    call (or ``None``); left out, it is read here."""
+    tombs = _tombstones_for(spark, index_path, scan, id_col, tombs)
+    if not tombs:
         return scan
-    return scan.join(
-        F.broadcast(tomb.select(F.col("id").alias(id_col))), id_col, "anti"
-    )
+    dead = _tomb_frame(spark, tombs, scan.schema[id_col].dataType, id_col)
+    return scan.join(F.broadcast(dead), id_col, "anti")
 
 
 def _compact_if_readmitting(new_rows: DataFrame, index_path: str, id_col: str) -> None:
@@ -281,16 +349,13 @@ def _compact_if_readmitting(new_rows: DataFrame, index_path: str, id_col: str) -
     batch actually re-admits, so the steady-state ingest path stays
     delta-sized."""
     spark = new_rows.sparkSession
-    tomb = _index_tombstones(spark, index_path)
-    if tomb is None:
+    id_type = new_rows.schema[id_col].dataType
+    tombs = _index_tombstones(spark, index_path, id_type)
+    if not tombs:
         return
-    n = (
-        new_rows.select(F.col(id_col).alias("id"))
-        .join(F.broadcast(tomb), "id", "semi")
-        .count()
-    )
-    if n:
-        compact_index(spark, index_path, id_col=id_col)
+    dead = _tomb_frame(spark, tombs, id_type, id_col)
+    if new_rows.select(id_col).join(F.broadcast(dead), id_col, "semi").count():
+        _compact(spark, index_path, id_col, tombs)
 
 
 def _drop_stale_tombstones(spark: SparkSession, index_path: str) -> None:
@@ -313,13 +378,15 @@ def compact_index(
     IVF-PQ code layout, whose columns pass through untouched) and
     drop the tombstone sidecar. Run on a cadence, like any lakehouse
     vacuum, so query-time anti-join cost stays bounded."""
-    tomb = _index_tombstones(spark, index_path)
-    if tomb is None:
-        return
+    _compact(spark, index_path, id_col, _UNREAD)
+
+
+def _compact(spark: SparkSession, index_path: str, id_col: str, tombs) -> None:
     scan = parquet_scan(spark, index_path, [("cid", "int")])
-    rows = scan.join(
-        F.broadcast(tomb.select(F.col("id").alias(id_col))), id_col, "anti"
-    )
+    tombs = _tombstones_for(spark, index_path, scan, id_col, tombs)
+    if tombs is None:
+        return
+    rows = _drop_tombstoned(scan, spark, index_path, id_col, tombs)
     stage = index_path.rstrip("/") + "__stage"
     rows.write.mode("overwrite").partitionBy("cid").parquet(stage)
     _swap_in(spark, index_path, stage)
@@ -342,19 +409,16 @@ def index_stats(
     metadata-sized frame (C = n_centroids), never over index rows.
     Works on both layouts: plain ANN and IVF-PQ store the same
     (id, cid) spine."""
-    scan = parquet_scan(spark, index_path, [("cid", "int")]).select(
-        F.col(id_col).alias("id"), "cid"
-    )
-    tomb = _index_tombstones(spark, index_path)
-    if tomb is not None:
-        scan = scan.join(
-            F.broadcast(tomb.withColumn("_dead", F.lit(1))), "id", "left"
-        )
-    else:
-        scan = scan.withColumn("_dead", F.lit(None).cast("int"))
+    return _index_stats(spark, index_path, id_col, _UNREAD)
+
+
+def _index_stats(spark: SparkSession, index_path: str, id_col: str, tombs) -> DataFrame:
+    scan = parquet_scan(spark, index_path, [("cid", "int")])
+    tombs = _tombstones_for(spark, index_path, scan, id_col, tombs)
+    scan = _flag_tombstoned(scan.select(id_col, "cid"), spark, id_col, tombs)
     per = scan.groupBy("cid").agg(
         F.count(F.lit(1)).alias("stored_rows"),
-        (F.count(F.lit(1)) - F.count("_dead")).alias("live_rows"),
+        (F.count(F.lit(1)) - F.count("__dead")).alias("live_rows"),
     )
     share = F.col("live_rows") / F.sum("live_rows").over(Window.partitionBy())
     return (
@@ -389,14 +453,24 @@ def index_ingest_drift(
     every cid appears exactly once even when a side has zero mass
     (``eps`` guards the log-ratio, the standard PSI convention,
     mirroring ``stats.population_stability``)."""
-    centroids = load_ann_centroids(spark, index_path)
-    spine = spark.range(len(centroids)).select(F.col("id").cast("int").alias("cid"))
-    live = index_stats(spark, index_path, id_col=id_col).select("cid", "live_rows")
+    return _ingest_drift(
+        spark, index_path, new_rows, load_ann_centroids(spark, index_path),
+        _UNREAD, vec_col, id_col, eps, assign,
+    )
+
+
+def _ingest_drift(
+    spark, index_path, new_rows, centroids, tombs, vec_col, id_col, eps=1e-4,
+    assign="auto",
+) -> DataFrame:
+    spine = local_df(spark, [(i,) for i in range(len(centroids))], "cid INT")
+    live = _index_stats(spark, index_path, id_col, tombs).select("cid", "live_rows")
     assigned = _assign_for_index(new_rows, centroids, vec_col, id_col, assign)
     batch = assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("batch_rows"))
+    # both sides are C-row frames: broadcast them onto the literal spine
     j = (
-        spine.join(live, "cid", "left")
-        .join(batch, "cid", "left")
+        spine.join(F.broadcast(live), "cid", "left")
+        .join(F.broadcast(batch), "cid", "left")
         .fillna(0, subset=["live_rows", "batch_rows"])
     )
     w = Window.partitionBy()  # C rows — metadata-sized by construction
@@ -516,59 +590,10 @@ def maintain_vector_index(
     "ingested_rows", "retrained", "extended", "live_share",
     "compacted"}`` (``live_share`` is the POST-ingest share the vacuum
     decision actually read) — a scheduler logs it."""
-    report = {
-        "psi": None,
-        "ingested_rows": 0,
-        "retrained": False,
-        "extended": False,
-        "live_share": None,
-        "compacted": False,
-    }
-    if new_rows is not None:
-        # idempotency guard: ids already live in the index are not a
-        # delta (tombstoned ids still pass — re-admission is handled
-        # by extend_ann_index's compact-first guard)
-        live_ids = _drop_tombstoned(
-            parquet_scan(spark, index_path, [("cid", "int")]).select(id_col),
-            spark, index_path, id_col,
-        )
-        # eager localCheckpoint: the delta's plan READS the index, and
-        # the steps below REWRITE it (retrain swap, append) — a lazy
-        # delta would re-list deleted files mid-tick. Materializing
-        # the delta-sized batch cuts that lineage once.
-        delta = new_rows.join(live_ids, id_col, "anti").localCheckpoint(
-            eager=True
-        )
-        n_delta = delta.count()
-        report["ingested_rows"] = int(n_delta)
-        if n_delta:
-            drift = index_ingest_drift(
-                spark, index_path, delta, vec_col=vec_col, id_col=id_col
-            )
-            psi = drift.agg(F.sum("psi_term")).collect()[0][0] or 0.0
-            report["psi"] = round(float(psi), 6)
-            if psi > psi_rebuild:
-                retrain_index(
-                    spark,
-                    index_path,
-                    n_iters=retrain_iters,
-                    vec_col=vec_col,
-                    id_col=id_col,
-                )
-                report["retrained"] = True
-            extend_ann_index(
-                delta, index_path, vec_col=vec_col, id_col=id_col
-            )
-            report["extended"] = True
-    stats = index_stats(spark, index_path, id_col=id_col).agg(
-        F.sum("stored_rows").alias("stored"), F.sum("live_rows").alias("live")
-    ).collect()[0]
-    share = float(stats.live) / float(stats.stored) if stats.stored else 1.0
-    report["live_share"] = round(share, 6)
-    if share < min_live_share and not report["retrained"]:
-        compact_index(spark, index_path, id_col=id_col)
-        report["compacted"] = True
-    return report
+    return _maintain_tick(
+        spark, index_path, new_rows, psi_rebuild, min_live_share, vec_col,
+        id_col, retrain_iters=retrain_iters,
+    )
 
 
 def maintain_pq_index(
@@ -580,7 +605,7 @@ def maintain_pq_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> dict:
-    """:func:`maintain_vector_index`'s twin for the compressed IVF-PQ
+    """:func:`maintain_vector_index` for the compressed IVF-PQ
     layout — the index a 100 TB deployment actually serves (VERDICT
     r10 ask 4). Same idempotent composition: live-id anti-join on the
     batch, PSI ingest gate, delta-sized extend, live-share vacuum —
@@ -597,48 +622,120 @@ def maintain_pq_index(
     through). Returns the decision trail: ``{"psi", "ingested_rows",
     "rebuild_from_corpus", "extended", "live_share", "compacted"}``.
     """
+    return _maintain_tick(
+        spark, index_path, new_rows, psi_rebuild, min_live_share, vec_col, id_col
+    )
+
+
+def _maintain_tick(
+    spark: SparkSession,
+    index_path: str,
+    new_rows: DataFrame | None,
+    psi_rebuild: float,
+    min_live_share: float,
+    vec_col: str,
+    id_col: str,
+    retrain_iters: int | None = None,
+) -> dict:
+    """The one tick behind :func:`maintain_vector_index`
+    (``retrain_iters`` set: plain layout, drift retrains) and
+    :func:`maintain_pq_index` (``retrain_iters=None``: IVF-PQ layout,
+    drift is reported). The index's metadata-sized state — centroids,
+    codebooks, tombstones — is read once here and handed to each step
+    (the drift gate, the re-admission check, the extend, the stats);
+    a compaction or retrain clears the tombstones it folds."""
+    pq_layout = retrain_iters is None
+    drift_key = "rebuild_from_corpus" if pq_layout else "retrained"
     report = {
         "psi": None,
         "ingested_rows": 0,
-        "rebuild_from_corpus": False,
+        drift_key: False,
         "extended": False,
         "live_share": None,
         "compacted": False,
     }
+    scan = parquet_scan(spark, index_path, [("cid", "int")])
+    tombs = _index_tombstones(spark, index_path, scan.schema[id_col].dataType)
     if new_rows is not None:
-        # idempotency guard + eager checkpoint: same reasoning as
-        # maintain_vector_index (the delta's plan reads the index a
-        # re-admitting extend may rewrite)
-        live_ids = _drop_tombstoned(
-            parquet_scan(spark, index_path, [("cid", "int")]).select(id_col),
-            spark, index_path, id_col,
+        # idempotency guard: ids already LIVE in the index are not a
+        # delta. A tombstoned id still passes (flagged ``__dead``) —
+        # the batch re-admits it, and compacts first, below.
+        flagged = _flag_tombstoned(new_rows, spark, id_col, tombs)
+        live = F.col("__dead").isNull() & (F.col(id_col) == F.col("__stored_id"))
+        delta = flagged.join(
+            scan.select(F.col(id_col).alias("__stored_id")), live, "anti"
         )
-        delta = new_rows.join(live_ids, id_col, "anti").localCheckpoint(
-            eager=True
-        )
-        n_delta = delta.count()
+        # eager localCheckpoint: the delta's plan READS the index, and
+        # the steps below REWRITE it (retrain swap, compaction,
+        # append) — a lazy delta would re-list deleted files mid-tick.
+        # Materializing the delta-sized batch cuts that lineage once;
+        # its row and re-admission counts are observed on that pass.
+        counts = Observation()
+        delta = delta.observe(
+            counts, F.count(F.lit(1)).alias("rows"), F.count("__dead").alias("readmit")
+        ).localCheckpoint(eager=True).drop("__dead")
+        n_delta, n_readmit = counts.get["rows"], counts.get["readmit"]
         report["ingested_rows"] = int(n_delta)
         if n_delta:
-            drift = index_ingest_drift(
-                spark, index_path, delta, vec_col=vec_col, id_col=id_col
+            centroids = load_ann_centroids(spark, index_path)
+            drift = _ingest_drift(
+                spark, index_path, delta, centroids, tombs, vec_col, id_col
             )
             psi = drift.agg(F.sum("psi_term")).collect()[0][0] or 0.0
             report["psi"] = round(float(psi), 6)
             if psi > psi_rebuild:
-                report["rebuild_from_corpus"] = True
-            extend_ivfpq_index(
-                delta, index_path, vec_col=vec_col, id_col=id_col
-            )
+                report[drift_key] = True
+                if not pq_layout:
+                    centroids = retrain_index(
+                        spark, index_path, n_iters=retrain_iters,
+                        vec_col=vec_col, id_col=id_col,
+                    )
+                    tombs, n_readmit = None, 0
+            if n_readmit:
+                # re-admission: fold the stale rows away before the
+                # append (see _compact_if_readmitting)
+                _compact(spark, index_path, id_col, tombs)
+                tombs = None
+            codebooks = load_pq_codebooks(spark, index_path) if pq_layout else None
+            _append(delta, index_path, centroids, codebooks, vec_col, id_col, "auto")
             report["extended"] = True
-    stats = index_stats(spark, index_path, id_col=id_col).agg(
-        F.sum("stored_rows").alias("stored"), F.sum("live_rows").alias("live")
-    ).collect()[0]
-    share = float(stats.live) / float(stats.stored) if stats.stored else 1.0
+    ids = parquet_scan(spark, index_path, [("cid", "int")]).select(id_col)
+    stored, dead = (
+        _flag_tombstoned(ids, spark, id_col, tombs)
+        .agg(F.count(F.lit(1)), F.count("__dead"))
+        .collect()[0]
+    )
+    share = float(stored - dead) / float(stored) if stored else 1.0
     report["live_share"] = round(share, 6)
-    if share < min_live_share:
-        compact_index(spark, index_path, id_col=id_col)
+    if share < min_live_share and not report.get("retrained"):
+        _compact(spark, index_path, id_col, tombs)
         report["compacted"] = True
     return report
+
+
+def _append(
+    new_rows: DataFrame,
+    index_path: str,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]] | None,
+    vec_col: str,
+    id_col: str,
+    assign: str,
+) -> None:
+    """Assign ``new_rows`` against the index's centroids — and, for
+    the IVF-PQ layout (``codebooks`` given), PQ-encode them, carrying
+    the raw vector iff the index already stores it — then append into
+    the existing ``cid`` partitions."""
+    out = _assign_for_index(new_rows, centroids, vec_col, id_col, assign)
+    if codebooks is not None:
+        st = _local_footer_schema(index_path)
+        store_vec = vec_col in (
+            st.fieldNames() if st is not None
+            else new_rows.sparkSession.read.parquet(index_path).columns
+        )
+        extra = ("cid", vec_col) if store_vec else ("cid",)
+        out = sim.pq_encode(out, codebooks, vec_col, id_col, extra_cols=extra)
+    out.write.mode("append").partitionBy("cid").parquet(index_path)
 
 
 def extend_ann_index(
@@ -659,11 +756,9 @@ def extend_ann_index(
     data distribution drifts from them — rebuild (or re-train + 
     re-bucket) on a cadence informed by the drift gates
     (``stats.population_stability``, embedding drift)."""
-    spark = new_rows.sparkSession
     _compact_if_readmitting(new_rows, index_path, id_col)
-    centroids = load_ann_centroids(spark, index_path)
-    assigned = _assign_for_index(new_rows, centroids, vec_col, id_col, assign)
-    assigned.write.mode("append").partitionBy("cid").parquet(index_path)
+    centroids = load_ann_centroids(new_rows.sparkSession, index_path)
+    _append(new_rows, index_path, centroids, None, vec_col, id_col, assign)
 
 
 # ---------------------------------------------------------------------------
@@ -677,12 +772,14 @@ def _codebook_sidecar(index_path: str) -> str:
 
 def load_pq_codebooks(spark: SparkSession, index_path: str) -> list[list[list[float]]]:
     """Codebooks from the IVF-PQ index sidecar, ``[m][k][sub_dim]``."""
-    rows = spark.read.schema("m INT, k INT, cw ARRAY<DOUBLE>").parquet(
-        _codebook_sidecar(index_path)
-    ).collect()
+    rows = _read_sidecar(
+        spark, _codebook_sidecar(index_path), "m INT, k INT, cw ARRAY<DOUBLE>"
+    )
+    if rows is None:
+        raise FileNotFoundError(f"no codebook sidecar for index {index_path}")
     by_m: dict[int, list] = {}
-    for r in rows:
-        by_m.setdefault(r.m, []).append((r.k, list(r.cw)))
+    for m, k, cw in rows:
+        by_m.setdefault(m, []).append((k, list(cw)))
     return [
         [cw for _, cw in sorted(by_m[m])] for m in sorted(by_m)
     ]
@@ -780,17 +877,10 @@ def extend_ivfpq_index(
     working after extension."""
     spark = new_rows.sparkSession
     _compact_if_readmitting(new_rows, index_path, id_col)
-    centroids = load_ann_centroids(spark, index_path)
-    codebooks = load_pq_codebooks(spark, index_path)
-    _st = _local_footer_schema(index_path)
-    store_vec = vec_col in (
-        _st.fieldNames() if _st is not None
-        else spark.read.parquet(index_path).columns
+    _append(
+        new_rows, index_path, load_ann_centroids(spark, index_path),
+        load_pq_codebooks(spark, index_path), vec_col, id_col, assign,
     )
-    assigned = _assign_for_index(new_rows, centroids, vec_col, id_col, assign)
-    extra = ("cid", vec_col) if store_vec else ("cid",)
-    coded = sim.pq_encode(assigned, codebooks, vec_col, id_col, extra_cols=extra)
-    coded.write.mode("append").partitionBy("cid").parquet(index_path)
 
 
 def query_ivfpq_index(
@@ -811,6 +901,16 @@ def query_ivfpq_index(
     codes only (:func:`~..operators.similarity.pq_adc_topk`: M lookups
     + M adds per pair, no vector math, no vector bytes moved).
 
+    Everything metadata-sized is resolved on the driver, once per
+    call: the centroid, codebook and tombstone sidecars are read
+    without a Spark job on local paths (:func:`_read_sidecar`), the
+    query batch is collected once (guarded at 10k), and its probed
+    cids and ADC lookup tables are computed there (bit-identical to
+    the SQL probe order) and enter the plan as literals — the probed
+    cids as the partition filter, LUTs and tombstones as broadcast
+    literal frames. The plan is then one scan of the probed
+    partitions, one window shuffle and the final stage.
+
     ``rerank=0`` returns the ADC ranking
     (query_id, neighbor_id, adc_dist, rank). ``rerank=r > 0`` takes
     the top-r ADC candidates per query and re-scores them EXACTLY from
@@ -819,7 +919,8 @@ def query_ivfpq_index(
     :func:`~..operators.similarity.cosine_topk`'s determinism contract
     (round 4, score desc, neighbor_id asc) — the standard two-stage
     serving shape: cheap approximate candidate generation over codes,
-    exact scoring over r << corpus rows.
+    exact scoring over r << corpus rows. Both raw vectors ride through
+    the ADC window, so the exact stage needs no second scan.
     """
     if rerank and rerank < k:
         # the exact stage can only re-rank what the ADC pool feeds it:
@@ -829,61 +930,34 @@ def query_ivfpq_index(
             f"rerank={rerank} must be >= k={k}: the ADC pool is the "
             "candidate set the exact re-rank draws from"
         )
-    centroids = load_ann_centroids(spark, index_path)
-    codebooks = load_pq_codebooks(spark, index_path)
-    probed = (
-        sim._drop_null_vecs(queries, vec_col)
-        .select(
-            F.explode(
-                sim.probe_cids_expr(
-                    sim._as_double(vec_col), centroids, n_probe
-                )
-            ).alias("cid")
-        )
-        .distinct()
-        .collect()
-    )
-    cids = sorted(r.cid for r in probed)
-    scan = _drop_tombstoned(
-        parquet_scan(spark, index_path, [("cid", "int")]).filter(
-            F.col("cid").isin(cids)
-        ),
-        spark, index_path, id_col,
-    )
-    codes = scan.select(
-        F.col(id_col).alias("neighbor_id"), "pq_code", "cid"
-    )
-    adc = sim.pq_adc_topk(
-        codes,
-        queries,
-        codebooks,
-        k=rerank if rerank else k,
-        vec_col=vec_col,
-        id_col=id_col,
-        probe=(centroids, n_probe),
-    )
-    if not rerank:
-        return adc
-    if vec_col not in scan.columns:
+    scan = parquet_scan(spark, index_path, [("cid", "int")])
+    if rerank and vec_col not in scan.columns:
         raise ValueError(
             "rerank needs the raw vectors: build the index with store_vec=True"
         )
-    qv = sim._drop_null_vecs(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        sim._as_double(vec_col).alias("qv"),
+    centroids = load_ann_centroids(spark, index_path)
+    codebooks = load_pq_codebooks(spark, index_path)
+    rows = sim._collect_queries(queries, vec_col, id_col, "query_ivfpq_index")
+    q, cids = sim._adc_query_frame(
+        spark, rows, queries.schema[id_col].dataType, codebooks,
+        probe=(centroids, n_probe), with_vec=bool(rerank),
     )
-    cv = scan.select(
-        F.col(id_col).alias("neighbor_id"), sim._as_double(vec_col).alias("cv")
+    scan = _drop_tombstoned(
+        scan.filter(F.col("cid").isin(cids)), spark, index_path, id_col
     )
-    exact = (
-        adc.select("query_id", "neighbor_id")
-        .join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(sim.cosine(F.col("qv"), F.col("cv")), 4).alias("score"),
-        )
+    cols = [F.col(id_col).alias("neighbor_id"), "pq_code", "cid"]
+    if rerank:
+        cols.append(sim._as_double(vec_col).alias("cv"))
+    adc = sim._adc_rank(
+        scan.select(*cols), q, len(codebooks), rerank or k,
+        carry=("qv", "cv") if rerank else (),
+    )
+    if not rerank:
+        return adc
+    exact = adc.select(
+        "query_id",
+        "neighbor_id",
+        F.round(sim.cosine(F.col("qv"), F.col("cv")), 4).alias("score"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("neighbor_id")

@@ -89,24 +89,6 @@ def detect_threshold(
     )
 
 
-def detect_missing(
-    df: DataFrame,
-    col: str,
-    form_id: str,
-    anomalies_id: str,
-    description: str,
-    key: str = "KEY",
-) -> DataFrame:
-    """Rows with a NULL/empty required value (pattern of
-    anomalies_detector/safety.R:214 is.na(geo_cluster_num))."""
-    return df.filter(F.col(col).isNull() | (F.col(col).cast("string") == "")).select(
-        F.col(key).alias("KEY"),
-        F.lit(form_id).alias("form_id"),
-        F.lit(anomalies_id).alias("anomalies_id"),
-        F.lit(description).alias("anomalies_description"),
-    )
-
-
 def consolidate(detections: Sequence[DataFrame]) -> DataFrame:
     """Union detector outputs into the anomalies_detection contract
     (05.run_anomaly_detection.R:52-65): all-string columns, NULL→'',

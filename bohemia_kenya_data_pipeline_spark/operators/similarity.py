@@ -14,7 +14,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
+
+from ..session import local_df
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -888,18 +891,6 @@ def _l2sq_lit(vec: Column, base: int, cw: list[float]) -> Column:
     )
 
 
-def _codebook_literal(cb_m: list[list[float]]) -> Column:
-    return F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("k"),
-                F.array(*[F.lit(float(v)) for v in cw]).alias("cw"),
-            )
-            for k, cw in enumerate(cb_m)
-        ]
-    )
-
-
 def pq_code(vec: Column, codebooks: list[list[list[float]]]) -> Column:
     """PQ code of a vector: array<int> of length n_subspaces, entry m =
     argmin-L2 codeword id of subvector m (ties -> smaller id, via
@@ -987,10 +978,11 @@ def pq_topk(
     adds instead of a dim-length dot product, and the corpus side
     ships codes (bytes), not vectors.
 
-    Shape: each query precomputes its lookup table (M x K subspace
-    distances) ONCE in a projection; the scoring join then indexes
-    that literal-sized array by the corpus code. Queries broadcast
-    (the top-k contract keeps the query set small); corpus streams.
+    Shape: each query's lookup table (M x K subspace distances) is
+    computed ONCE on the driver (:func:`pq_adc_topk`); the scoring
+    join then indexes that literal array by the corpus code. Queries
+    broadcast (the top-k contract keeps the query set small, guarded
+    at 10k); corpus streams.
     Returns (query_id, neighbor_id, adc_dist, rank) — approximate by
     construction; recall vs exact is golden-tested, and the whole
     deterministic pipeline is oracle-mirrored in SQL with the same
@@ -1003,27 +995,152 @@ def pq_topk(
     return pq_adc_topk(codes, queries, codebooks, k=k, vec_col=vec_col, id_col=id_col)
 
 
-def probe_cids_expr(qv: Column, centroids: list[list[float]], n_probe: int) -> Column:
-    """Per-query probed-centroid ids as an ``array<int>`` Column — the
-    single probe-selection expression every IVF-family path shares
-    (sort (neg-dot, cid) structs over the unit-normalized literal
-    centroids, slice ``n_probe``; ties -> smaller cid). Extracted from
-    :func:`ivf_topk` so the raw-vector, Arrow, serving-index and PQ
-    paths can never drift in probe semantics."""
-    cents = _centroid_literal(centroids)
-    probes = F.slice(
-        F.sort_array(
-            F.transform(
-                cents,
-                lambda ce: F.struct(
-                    (-dot(qv, ce["cv"])).alias("d"), ce["cid"].alias("cid")
-                ),
-            )
-        ),
-        1,
-        n_probe,
+def _collect_queries(
+    queries: DataFrame, vec_col: str, id_col: str, caller: str
+) -> list:
+    """The query batch on the driver as ``(qid, qv)`` rows, NULL vectors
+    dropped (the :func:`_drop_null_vecs` contract) and ``qv`` cast to
+    double. Every driver-side query kernel collects its batch ONCE
+    through here and then broadcasts it or turns it into literals, so
+    the batch must be the small fixed production batch: guarded at
+    10k."""
+    rows = (
+        _drop_null_vecs(queries, vec_col)
+        .select(F.col(id_col).alias("qid"), _as_double(vec_col).alias("qv"))
+        .collect()
     )
-    return F.transform(probes, lambda p: p["cid"])
+    if len(rows) > 10_000:
+        raise ValueError(
+            f"{len(rows)} query vectors: {caller} broadcasts the query "
+            "batch — pass the fixed production batch, not a corpus-sized "
+            "query set (use lsh_topk/ivf_topk for that)"
+        )
+    return rows
+
+
+def _query_matrix(rows: list, dim: int | None = None) -> np.ndarray:
+    """(Q, D) float64 matrix of collected query vectors (NULL elements
+    become NaN). ``dim`` defaults to the first vector's width; a
+    vector of any other width fails loud, on the driver."""
+    vecs = [list(r["qv"]) for r in rows]
+    if dim is None:
+        dim = len(vecs[0]) if vecs else 0
+    bad = next((len(v) for v in vecs if len(v) != dim), None)
+    if bad is not None:
+        raise ValueError(f"query vectors must all have dim {dim}, got {bad}")
+    return np.asarray(vecs, dtype=np.float64).reshape(len(vecs), dim)
+
+
+def _probe_cids(
+    qm: np.ndarray, centroids: list[list[float]], n_probe: int
+) -> np.ndarray:
+    """(Q, n_probe) probed centroid ids, computed on the driver and
+    bit-identical to the SQL probe expression :func:`_probe_cids_sql`:
+    the same :func:`_unit` centroids, the same left-to-right
+    ``0.0 + x0*c0 + x1*c1 + ...`` double fold as :func:`_dot_sql` (one
+    elementwise IEEE multiply and add per dimension, no BLAS
+    reordering) and the same (-dot, cid) ascending order, in which
+    -0.0 == 0.0 and NaN sorts last, so ties go to the smaller cid. A
+    query whose width differs from the centroids' folds to NULL
+    against every centroid in SQL (``zip_with`` pads with NULL): an
+    all-tie row, which probes cids ``0..n_probe-1`` in both."""
+    cents = np.asarray([_unit(c) for c in centroids], dtype=np.float64)
+    dots = np.zeros((len(qm), len(cents)), dtype=np.float64)
+    if qm.shape[1] != cents.shape[1]:
+        dots[:] = np.nan
+    else:
+        for i in range(cents.shape[1]):
+            dots = dots + qm[:, i, None] * cents[None, :, i]
+    # stable sort: equal keys (including -0.0 vs 0.0 and NaN vs NaN)
+    # keep cid order
+    return np.argsort(-dots, axis=1, kind="stable")[:, :n_probe].astype(np.int32)
+
+
+def _adc_luts(qm: np.ndarray, codebooks: list[list[list[float]]]) -> np.ndarray:
+    """(Q, M, K) ADC lookup tables: squared L2 between each query's
+    subvector m and every codeword of subspace m, the same numpy
+    expression as :func:`pq_encode`'s distance tensor. The one LUT
+    kernel, run once per query batch on the driver."""
+    cb = np.asarray(codebooks, dtype=np.float64)  # (M, K, sub)
+    xs = qm.reshape(len(qm), cb.shape[0], 1, cb.shape[2])
+    return ((xs - cb[None, :, :, :]) ** 2).sum(axis=-1)
+
+
+def _adc_query_frame(
+    spark,
+    rows: list,
+    id_type: T.DataType,
+    codebooks: list[list[list[float]]],
+    probe: tuple[list[list[float]], int] | None = None,
+    with_vec: bool = False,
+) -> tuple[DataFrame, list[int]]:
+    """The query side of ADC scoring as a literal frame
+    (``LocalTableScan``), built from the ONE collected batch ``rows``
+    (:func:`_collect_queries`): ``(query_id, lut[, cid][, qv])``, with
+    the LUTs (:func:`_adc_luts`) and, for ``probe=(centroids,
+    n_probe)``, the probed cids (:func:`_probe_cids`) computed on the
+    driver, so the query side runs no Python worker and no scan.
+    ``cid`` is exploded in the plan from a per-query array, so each
+    LUT ships once per query. ``with_vec`` carries the raw query
+    vector for an exact re-rank. Returns the frame and the sorted
+    union of probed cids (empty without ``probe``)."""
+    n_sub, _, sub = np.asarray(codebooks, dtype=np.float64).shape
+    qm = _query_matrix(rows, n_sub * sub)
+    recs = [[r["qid"], lut] for r, lut in zip(rows, _adc_luts(qm, codebooks).tolist())]
+    fields = [
+        T.StructField("query_id", id_type),
+        T.StructField("lut", T.ArrayType(T.ArrayType(T.DoubleType()))),
+    ]
+    cids: list[int] = []
+    if probe is not None:
+        probes = _probe_cids(qm, *probe)
+        cids = sorted({int(c) for c in probes.flat})
+        fields.append(T.StructField("cids", T.ArrayType(T.IntegerType())))
+        for rec, p in zip(recs, probes.tolist()):
+            rec.append(p)
+    if with_vec:
+        fields.append(T.StructField("qv", T.ArrayType(T.DoubleType())))
+        for rec, r in zip(recs, rows):
+            rec.append(list(r["qv"]))
+    q = local_df(spark, [tuple(rec) for rec in recs], T.StructType(fields))
+    if probe is not None:
+        q = q.select(
+            *[F.explode("cids").alias("cid") if c == "cids" else c for c in q.columns]
+        )
+    return q, cids
+
+
+def _adc_rank(
+    codes: DataFrame, q: DataFrame, n_sub: int, k: int, carry: tuple = ()
+) -> DataFrame:
+    """Top-``k`` by ADC distance per query: broadcast the literal query
+    frame ``q`` (:func:`_adc_query_frame`) against ``codes`` (a hash
+    join on ``cid`` when ``q`` carries probed cids, else the
+    exhaustive cross join), score M LUT lookups + adds per pair,
+    exclude self-matches, rank by (adc_dist, neighbor_id). ``carry``
+    columns ride through the window, so an exact re-rank over the
+    top-k needs no second scan."""
+    code = F.col("pq_code")
+    score = None
+    for m in range(n_sub):
+        # element_at is 1-based and takes a Column index (getItem with
+        # a Column key silently yields NULL on arrays)
+        term = F.element_at(F.col("lut")[m], code[m] + 1)
+        score = term if score is None else score + term
+    if "cid" in q.columns:
+        # equi-join on cid: each corpus code lives in exactly one cid
+        # and a query's probed cids are distinct, so pairs are unique
+        pairs = F.broadcast(q).join(codes, "cid")
+    else:
+        pairs = F.broadcast(q).crossJoin(codes)
+    pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", F.round(score, 6).alias("adc_dist"), *carry
+    )
+    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
 
 
 def pq_adc_topk(
@@ -1040,68 +1157,29 @@ def pq_adc_topk(
     :func:`pq_encode` or the scan of a persisted IVF-PQ index — so the
     scan ships M small ints per row and the raw vectors never move.
 
+    The query side is driver-side metadata: the batch is collected
+    once (:func:`_collect_queries`: NULL vectors dropped, guarded at
+    10k), each query's M x K lookup table is one numpy expression on
+    the driver, and both enter the plan as a literal frame
+    (:func:`_adc_query_frame`), not a per-batch UDF.
     ``probe=(centroids, n_probe)`` turns the scorer into IVF-PQ:
-    ``codes`` must then carry the index's ``cid`` column, each query
-    explodes its probed cids (:func:`probe_cids_expr`, identical
-    semantics to :func:`ivf_topk`), and candidates come from a
+    ``codes`` must then carry the index's ``cid`` column, each query's
+    probed cids come from :func:`_probe_cids` (bit-identical to
+    :func:`ivf_topk`'s SQL probe order), and candidates come from a
     broadcast hash join on ``cid`` — never a cross join, expected
     n_probe/n_centroids of the scanned codes per query. Without
     ``probe`` the candidate set is the whole ``codes`` input
     (broadcast-queries cross join), which is :func:`pq_topk`'s
-    exhaustive regime.
+    exhaustive regime. An empty query batch gives an empty result.
 
     Returns (query_id, neighbor_id, adc_dist, rank), rank by
     (adc_dist asc, neighbor_id asc) — same determinism contract as
     :func:`pq_topk`, whose SQL oracle hash-checks this scorer."""
-    queries = _drop_null_vecs(queries, vec_col)
-    cb_np = np.asarray(codebooks, dtype=np.float64)  # (M, K, sub)
-    n_sub = cb_np.shape[0]
-
-    # per-query ADC lookup table, Arrow-vectorized for the same
-    # planning-cost reason as pq_encode (an all-Column LUT needs M*K
-    # sibling fold expressions; building them also tripped a Catalyst
-    # lambda-variable collision when written as sibling transforms —
-    # subspace m scored against another subspace's codewords)
-    @pandas_udf("array<array<double>>")
-    def make_lut(vecs: pd.Series) -> pd.Series:
-        x = np.asarray(list(vecs), dtype=np.float64)
-        xs = x.reshape(len(x), n_sub, 1, cb_np.shape[2])
-        lut = ((xs - cb_np[None, :, :, :]) ** 2).sum(axis=-1)  # (n, M, K)
-        return pd.Series([list(map(list, row)) for row in lut])
-
-    qcols = [
-        F.col(id_col).alias("query_id"),
-        make_lut(F.col(vec_col)).alias("lut"),
-    ]
-    if probe is not None:
-        centroids, n_probe = probe
-        qcols.append(
-            F.explode(
-                probe_cids_expr(_as_double(vec_col), centroids, n_probe)
-            ).alias("cid")
-        )
-    q = queries.select(*qcols)
-    code = F.col("pq_code")
-    score = None
-    for m in range(len(codebooks)):
-        # element_at is 1-based and takes a Column index (getItem with
-        # a Column key silently yields NULL on arrays)
-        term = F.element_at(F.col("lut")[m], code[m] + 1)
-        score = term if score is None else score + term
-    if probe is not None:
-        # equi-join on cid: each corpus code lives in exactly one cid
-        # and a query's probed cids are distinct, so pairs are unique
-        pairs = F.broadcast(q).join(codes, "cid")
-    else:
-        pairs = F.broadcast(q).crossJoin(codes)
-    pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
-        "query_id", "neighbor_id", F.round(score, 6).alias("adc_dist")
+    rows = _collect_queries(queries, vec_col, id_col, "pq_adc_topk")
+    q, _ = _adc_query_frame(
+        codes.sparkSession, rows, queries.schema[id_col].dataType, codebooks, probe
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _adc_rank(codes, q, len(codebooks), k)
 
 
 def pq_train_codebooks(
@@ -1475,21 +1553,11 @@ def cosine_topk_arrow(
     """
     if batch_keep is None:
         batch_keep = 3 * k
-    q_rows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("qid"), _as_double(vec_col).alias("qv"))
-        .collect()
-    )
-    if len(q_rows) > 10_000:
-        raise ValueError(
-            f"{len(q_rows)} query vectors: cosine_topk_arrow broadcasts "
-            "the query batch — pass the fixed production batch, not a "
-            "corpus-sized query set (use lsh_topk/ivf_topk for that)"
-        )
+    q_rows = _collect_queries(queries, vec_col, id_col, "cosine_topk_arrow")
     if not q_rows:
         raise ValueError("empty query batch (no rows, or every query vector NULL)")
     qids = np.asarray([r["qid"] for r in q_rows], dtype=np.int64)
-    qm = np.asarray([list(r["qv"]) for r in q_rows], dtype=np.float64)
+    qm = _query_matrix(q_rows)
     qn = np.linalg.norm(qm, axis=1)
     qn[qn == 0.0] = 1.0
     sc = corpus.sparkSession.sparkContext
@@ -1581,20 +1649,11 @@ def quantized_topk_arrow(
         q[scales == 0] = 0
         return q, scales
 
-    q_rows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("qid"), _as_double(vec_col).alias("qv"))
-        .collect()
-    )
-    if len(q_rows) > 10_000:
-        raise ValueError(
-            f"{len(q_rows)} query vectors: quantized_topk_arrow broadcasts "
-            "the query batch — pass the fixed production batch"
-        )
+    q_rows = _collect_queries(queries, vec_col, id_col, "quantized_topk_arrow")
     if not q_rows:
         raise ValueError("empty query batch (no rows, or every query vector NULL)")
     qids = np.asarray([r["qid"] for r in q_rows], dtype=np.int64)
-    qq, _ = _quant(np.asarray([list(r["qv"]) for r in q_rows], dtype=np.float64))
+    qq, _ = _quant(_query_matrix(q_rows))
     qn = np.sqrt((qq * qq).sum(axis=1).astype(np.float64))
     sc = corpus.sparkSession.sparkContext
     bq = sc.broadcast((qids, qq, qn))
@@ -1683,26 +1742,15 @@ def ivf_topk_arrow(
     if batch_keep is None:
         batch_keep = 3 * k
     cents = np.asarray([_unit(c) for c in centroids], dtype=np.float64)
-    q_rows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("qid"), _as_double(vec_col).alias("qv"))
-        .collect()
-    )
-    if len(q_rows) > 10_000:
-        raise ValueError(
-            f"{len(q_rows)} query vectors: ivf_topk_arrow broadcasts the "
-            "query batch — pass the fixed production batch"
-        )
+    q_rows = _collect_queries(queries, vec_col, id_col, "ivf_topk_arrow")
     if not q_rows:
         raise ValueError("empty query batch (no rows, or every query vector NULL)")
     qids = np.asarray([r["qid"] for r in q_rows], dtype=np.int64)
-    qm = np.asarray([list(r["qv"]) for r in q_rows], dtype=np.float64)
+    qm = _query_matrix(q_rows)
     qn = np.linalg.norm(qm, axis=1)
     qn_safe = np.where(qn > 0, qn, 1.0)
-    # per-query probe list: dot desc, cid asc — np.lexsort on
-    # (-dot, cid) == sort_array of struct(-dot, cid) in the fold path
-    qd = qm @ cents.T
-    probes = np.argsort(-qd, axis=1, kind="stable")[:, :n_probe]
+    # per-query probe list: dot desc, cid asc, the fold path's order
+    probes = _probe_cids(qm, centroids, n_probe)
     sc = corpus.sparkSession.sparkContext
     bq = sc.broadcast((qids, qm, qn_safe, probes, cents))
 
@@ -1784,21 +1832,11 @@ def cosine_threshold_pairs_arrow(
 
     Returns (query_id, neighbor_id, score).
     """
-    q_rows = (
-        _drop_null_vecs(queries, vec_col)
-        .select(F.col(id_col).alias("qid"), _as_double(vec_col).alias("qv"))
-        .collect()
-    )
-    if len(q_rows) > 10_000:
-        raise ValueError(
-            f"{len(q_rows)} query vectors: cosine_threshold_pairs_arrow "
-            "broadcasts the query batch — pass the fixed benchmark/"
-            "blocklist set, not a corpus-sized one"
-        )
+    q_rows = _collect_queries(queries, vec_col, id_col, "cosine_threshold_pairs_arrow")
     if not q_rows:
         raise ValueError("empty query batch (no rows, or every query vector NULL)")
     qids = np.asarray([r["qid"] for r in q_rows], dtype=np.int64)
-    qm = np.asarray([list(r["qv"]) for r in q_rows], dtype=np.float64)
+    qm = _query_matrix(q_rows)
     qn = np.linalg.norm(qm, axis=1)
     bq = corpus.sparkSession.sparkContext.broadcast((qids, qm, qn))
     thr = float(threshold)

@@ -118,15 +118,6 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(canon)
 
 
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    """Per-language stopword-hit counts (the lang-ID signal)."""
-    toks = F.array_distinct(tokens(F.lower(F.col(text) if isinstance(text, str) else text)))
-    return {
-        lang: F.size(F.array_intersect(toks, F.array([F.lit(w) for w in words])))
-        for lang, words in LANG_PROFILES.items()
-    }
-
-
 def detect_language(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
     """Heuristic language ID: argmax of stopword-profile hits, 'und'
     when nothing matches. Ties broken by fixed language order (en

@@ -63,22 +63,6 @@ def fill_down(
     return out
 
 
-def top_n_per_group(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence[str | Column],
-    n: int,
-    descending: bool = True,
-) -> DataFrame:
-    """Top-N rows per group — W7 (randomize.R:1133-1136 priority<=35)."""
-    w = Window.partitionBy(*keys).orderBy(*_desc_keys(order_by, descending))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n)
-        .drop("__rn")
-    )
-
-
 def with_group_count(df: DataFrame, keys: Sequence[str], out_col: str = "n") -> DataFrame:
     """group_by + mutate(n = n()) — A5, duplication detection
     (anomalies_utils.R:10-14). Window count, no second join."""

@@ -77,9 +77,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet has stored ``ts`` either as INT64 TIMESTAMP(NANOS)
     (older driver generations — Spark's parquet reader rejects nanos
-    unless read as long) or as TIMESTAMP(MICROS). Normalize both to one
-    stable TimestampType column so every consumer sees one schema."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    unless read as long; ``session.get_spark`` sets
+    ``spark.sql.legacy.parquet.nanosAsLong`` once) or as
+    TIMESTAMP(MICROS). Normalize both to one stable TimestampType
+    column so every consumer sees one schema."""
     path = os.path.join(sf_dir, "events.parquet")
     st = _SCHEMA_MEMO.get(path)
     if st is None:
@@ -165,7 +166,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming reader over events.parquet handling both historical
     ``ts`` encodings (see ``_events``). ``readStream`` needs an explicit
     schema, so peek at the batch footer first — a metadata-only read."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ts_type = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema[
         "ts"
     ].dataType

@@ -149,6 +149,10 @@ def get_spark(
         # --- IO: vectorized parquet + pushdown are default-on; keep
         #     session timezone pinned so date/ts semantics are stable ---
         .config("spark.sql.session.timeZone", "UTC")
+        # events.parquet from older generations stores ts as INT64
+        # TIMESTAMP(NANOS), which the reader rejects unless read as
+        # long (queries._events normalizes both encodings)
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # dims in this workload are tiny (<= a few thousand rows);
         # default 10 MB broadcast threshold is fine, AQE raises it at
         # runtime via local shuffle reader when beneficial.

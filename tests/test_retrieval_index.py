@@ -745,3 +745,137 @@ def test_maintain_pq_index_policy_ticks(spark, tmp_path):
         spark, path, corpus.filter(F.col("vec_id") == 3), k=3, n_probe=4
     )
     assert out.count() == 3
+
+
+# ---------------------------------------------------------------------------
+# driver-side index metadata: job counts and probe parity
+# ---------------------------------------------------------------------------
+
+
+def _count_jobs(spark, fn):
+    """Spark jobs started by ``fn()``, counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _served_pq_index(spark, tmp_path, name):
+    """A store_vec IVF-PQ index over 400 toy vectors with a tombstoned
+    class, so every serving-path piece (sidecars, tombstones, re-rank
+    vectors) is live."""
+    corpus = _toy_corpus(spark)
+    path = str(tmp_path / name)
+    rt.build_ivfpq_index(
+        corpus, path,
+        centroids=[[1.0] + [0.0] * 7, [0.0] * 3 + [1.0] + [0.0] * 4,
+                   [0.0] * 7 + [1.0], [0.5] * 8],
+        codebooks=_toy_codebooks(), store_vec=True,
+    )
+    rt.delete_from_index(corpus.filter(F.col("vec_id") % 10 == 7), path)
+    return corpus, path
+
+
+def test_ivfpq_serving_round_runs_at_most_five_jobs(spark, tmp_path):
+    # one round = query collect, literal query-frame broadcast,
+    # tombstone broadcast, window shuffle, final stage: the sidecars,
+    # probes and LUTs are driver-side (12 jobs when each was its own)
+    corpus, path = _served_pq_index(spark, tmp_path, "pq_jobs")
+    queries = corpus.filter(F.col("vec_id") % 40 == 1)
+    out = []
+    n = _count_jobs(
+        spark,
+        lambda: out.extend(
+            rt.query_ivfpq_index(
+                spark, path, queries, k=5, n_probe=2, rerank=20
+            ).collect()
+        ),
+    )
+    assert n <= 5, n
+    assert len(out) == 5 * queries.count()
+    assert not {r.neighbor_id for r in out} & {
+        r.vec_id for r in corpus.filter(F.col("vec_id") % 10 == 7).collect()
+    }
+
+
+def test_maintain_pq_index_readmitting_tick_job_count(spark, tmp_path):
+    # a re-admitting tick (the batch holds the tombstoned class, so it
+    # compacts first) stays at its pinned job count: the sidecars are
+    # read on the driver, the delta's row and re-admission counts are
+    # observed on its checkpoint pass, and the live share is one
+    # aggregate (32 jobs when every helper re-read and re-counted)
+    corpus, path = _served_pq_index(spark, tmp_path, "pq_tick_jobs")
+    batch = corpus.filter(F.col("vec_id") % 10 == 7)
+    report = {}
+    n = _count_jobs(
+        spark, lambda: report.update(rt.maintain_pq_index(spark, path, batch))
+    )
+    assert report["ingested_rows"] == 40 and report["extended"]
+    assert n <= 15, n
+    assert spark.read.parquet(path).count() == 400
+
+
+def test_maintain_pq_index_tick_reads_each_sidecar_once(spark, tmp_path, monkeypatch):
+    corpus, path = _served_pq_index(spark, tmp_path, "pq_tick_reads")
+    reads = []
+    real = rt._read_sidecar
+    monkeypatch.setattr(
+        rt, "_read_sidecar", lambda s, p, ddl: reads.append(p) or real(s, p, ddl)
+    )
+    rt.maintain_pq_index(spark, path, corpus.filter(F.col("vec_id") % 10 == 7))
+    # centroids, codebooks and tombstones: each exactly once
+    assert sorted(reads) == sorted(
+        [rt._centroid_sidecar(path), rt._codebook_sidecar(path),
+         rt._tombstone_sidecar(path)]
+    ), reads
+
+
+def _sql_probes(spark, rows, cents, n_probe):
+    qs = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    probe = F.expr(sim._probe_cids_sql("`qv`", sim._centroid_literal_sql(cents), n_probe))
+    got = (
+        sim._drop_null_vecs(qs, "embedding")
+        .select("vec_id", sim._as_double("embedding").alias("qv"))
+        .select("vec_id", probe.alias("p"))
+        .collect()
+    )
+    return {r.vec_id: list(r.p) for r in got}
+
+
+def _driver_probes(spark, rows, cents, n_probe):
+    qs = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    q = sim._collect_queries(qs, "embedding", "vec_id", "test")
+    probes = sim._probe_cids(sim._query_matrix(q, 4), cents, n_probe)
+    return {r["qid"]: p for r, p in zip(q, probes.tolist())}
+
+
+def test_driver_probes_equal_sql_probes_on_edge_cases(spark):
+    import random
+
+    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0],
+             [0.0, 0.0, 2.0, 0.0], [-1.0, 0.0, 0.0, 0.0], [0.3, -0.2, 0.1, 0.9]]
+    rnd = random.Random(7)
+    rows = [
+        (1, [0.5, 0.5, 0.0, 0.0]),  # equidistant from cids 0 and 1
+        (2, [0.0, 0.0, 0.0, 0.0]),  # all-zero: every dot ties
+        (3, None),  # NULL vector: dropped on both paths
+        (4, [0.0, 0.7, 0.7, 0.0]),  # tie between cid 1 and unit cid 2
+    ] + [(10 + i, [rnd.uniform(-1, 1) for _ in range(4)]) for i in range(40)]
+    for n_probe in (1, 2, 5):
+        want = _sql_probes(spark, rows, cents, n_probe)
+        got = _driver_probes(spark, rows, cents, n_probe)
+        assert got == want, n_probe
+    assert _driver_probes(spark, rows, cents, 1)[1] == [0]  # smaller cid wins
+    assert _driver_probes(spark, rows, cents, 2)[2] == [0, 1]
+    assert _driver_probes(spark, rows, cents, 2)[4] == [1, 2]
+    assert 3 not in _driver_probes(spark, rows, cents, 1)
+    # an empty batch probes nothing on either path
+    assert _driver_probes(spark, [(3, None)], cents, 2) == {}
+    assert _sql_probes(spark, [(3, None)], cents, 2) == {}
+    assert sim._probe_cids(sim._query_matrix([], 4), cents, 2).shape == (0, 2)

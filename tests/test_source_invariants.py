@@ -12,6 +12,8 @@ ran by hand, codified so they can't regress silently.
    filters with GENUINE predicates (rlike, endswith, positional,
    runtime-array comparisons) are allowed; only the equality-to-""
    pattern has a native replacement.
+3. No library code changes session settings (``spark.conf.set``):
+   they are set once in ``session.get_spark``.
 """
 
 from __future__ import annotations
@@ -73,3 +75,16 @@ def test_extra_conf_typo_fails_loud(monkeypatch):
     )
     with pytest.raises(ValueError, match="not 'key=value'"):
         get_spark(app_name="conf-typo-test")
+
+
+def test_no_library_code_changes_session_conf():
+    # session-wide settings belong in session.get_spark: a query
+    # builder that calls spark.conf.set mutates the caller's session
+    # (the old per-call nanosAsLong set in queries._events)
+    hits = [
+        f"{name}:{i}"
+        for name, src in _sources()
+        for i, line in enumerate(src.splitlines(), 1)
+        if re.search(r"\.conf\.(set|unset)\(", line)
+    ]
+    assert hits == [], f"session conf changed outside get_spark: {hits}"
