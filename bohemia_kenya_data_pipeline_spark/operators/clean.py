@@ -35,6 +35,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import AtomicType
 
 from ..session import local_df
 
@@ -142,15 +143,22 @@ def apply_sets(
 ) -> DataFrame:
     """Apply SET resolutions — processing_utils.R:237-332.
 
-    1. keep-last per (instanceID, Column, RepeatName, RepeatKey) by
+    1. keep-last per (instanceID, Column[, RepeatName, RepeatKey]) by
        ``order_col`` (the reference keeps sheet row order; we demand an
-       explicit ordering column for determinism under shuffle);
-    2. pivot the long (Column, Set To) rows to one row per target;
-    3. broadcast left-join onto the data (main: instanceID; repeat:
-       PARENT_KEY=instanceID + repeat coordinates);
-    4. per target column: ``coalesce(cast(new, <declared type>), old)``.
+       explicit ordering column for determinism under shuffle); on the
+       main table the repeat coordinates are not part of the cell;
+    2. fold each target row's surviving SETs into one
+       ``map<Column, Set To>``;
+    3. broadcast left-join the maps onto the data (main: instanceID;
+       repeat: PARENT_KEY=instanceID + repeat coordinates);
+    4. per atomic-typed data column:
+       ``coalesce(try_cast(map[c] AS <declared type>), old)`` — a
+       column no SET names looks up NULL and keeps its value.
 
-    Only columns present in ``data`` are applied (any_of semantics).
+    Only columns present in ``data`` are applied (any_of semantics);
+    complex-typed columns (array/map/struct) are never SET targets.
+    The target columns are never read on the driver, so building the
+    plan starts no Spark job.
 
     ``form_id`` restricts the sheet to one form, like
     :func:`apply_deletes` does unconditionally. When ``None`` the
@@ -158,30 +166,28 @@ def apply_sets(
     (:func:`google_sheets_fix` does) — otherwise SETs recorded for
     form B hit form A rows that share an instanceID.
     """
+    targets = {
+        f.name: f.dataType.simpleString()
+        for f in data.schema.fields
+        if isinstance(f.dataType, AtomicType)
+    }
+    if not targets:
+        return data
     if form_id is not None:
         resolution = resolution.filter(F.col("Form") == form_id)
     sets = _normalize_repeat_coords(resolution.filter(F.col("Operation") == "SET"))
+    cell = ["instanceID", "Column"]
     if repeat_name is None:
         sets = sets.filter(_is_main(F.col("RepeatName")))
     else:
         sets = sets.filter(F.col("RepeatName") == repeat_name)
+        cell += ["RepeatName", "RepeatKey"]
+    sets = sets.filter(F.col("Column").isin(list(targets)))
 
-    # resolution sheets are tiny: distinct target columns is driver
-    # metadata (like a schema), not a data-scale collect.
-    target_cols = [
-        r["Column"]
-        for r in sets.select("Column").distinct().collect()
-        if r["Column"] in data.columns
-    ]
-    if not target_cols:
-        return data
-
-    w = Window.partitionBy("instanceID", "Column", "RepeatName", "RepeatKey").orderBy(
-        F.col(order_col).desc()
-    )
+    w = Window.partitionBy(*cell).orderBy(F.col(order_col).desc())
     last = sets.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
-    # main path: one pivot row per instanceID, period — grouping by
-    # the (already-filtered-constant) repeat coords would let mixed
+    # main path: one map row per instanceID, period — grouping by the
+    # (already-filtered-constant) repeat coords would let mixed
     # NULL/'' encodings fan the join out.
     group_cols = (
         ["instanceID"]
@@ -192,7 +198,9 @@ def apply_sets(
             F.col("RepeatKey").alias("__rp_key"),
         ]
     )
-    pvt = last.groupBy(*group_cols).pivot("Column", target_cols).agg(F.first("Set To"))
+    pvt = last.groupBy(*group_cols).agg(
+        F.map_from_entries(F.collect_list(F.struct("Column", "Set To"))).alias("__sets")
+    )
 
     if repeat_name is None:
         d = data.alias("d")
@@ -219,10 +227,10 @@ def apply_sets(
     # as.numeric->NA->coalesce), not abort the job under ANSI mode.
     exprs = []
     for c in data.columns:
-        if c in target_cols:
-            typ = data.schema[c].dataType.simpleString()
+        if c in targets:
+            key = c.replace("\\", "\\\\").replace("'", "\\'")
             exprs.append(
-                f"coalesce(try_cast(p.`{c}` AS {typ}), d.`{c}`) AS `{c}`"
+                f"coalesce(try_cast(p.__sets['{key}'] AS {targets[c]}), d.`{c}`) AS `{c}`"
             )
         else:
             exprs.append(f"d.`{c}` AS `{c}`")

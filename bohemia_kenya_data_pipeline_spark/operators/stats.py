@@ -1,18 +1,26 @@
-"""Epi-analysis operators: the RDT incident-case state machine (W9 —
-the one genuine grouped-map UDF in the reference) and the
-prevalence/incidence CI expressions.
+"""Epi-analysis operators: the RDT incident-case state machine (W9)
+and the prevalence/incidence CI expressions.
 
 Reference (in /root/reference/):
 - RDT flowchart: pipeline-analysis/data_prep/evaluate_rdts.R:82-135
-  (ordered per-extid loop; incident_case[i] depends on the *computed*
-  incident_case[i-1] — a true recurrence, not a window)
+  (ordered per-extid loop; incident_case[i] reads the *computed*
+  incident_case[i-1])
 - rates + CIs: pipeline-analysis/prevalence_incidence/
   prevalence_incidence.qmd:22-47
 
 Spark-first design (100 TB):
-- ``applyInPandas`` per extid: one shuffle on extid; groups are ≤7
-  visit rows, so skew is structurally impossible. The pandas loop
-  touches only the group — Arrow batches amortize the Python hop.
+- The flowchart's recurrence reduces to run parity, so it is two
+  window passes over ONE extid exchange, all JVM-side. Only one
+  branch reads incident_case[i-1]: pf Positive, pan not Positive, a
+  consecutive visit, previous pf Positive and previous coartem 'yes'
+  (call it A[i]); there incident[i] = NOT incident[i-1]. The row
+  before a run of A rows has pf Positive and is not itself an A row,
+  and every such row is incident (enrollment with pf Positive, pan
+  Positive, or the pf Positive fall-through). So inside a run the
+  flags alternate F, T, F, ... counted from the last non-A row:
+  ``incident[i] = (idx[i] - max(idx[j] : j <= i, not A[j])) % 2 == 0``,
+  which is TRUE on the non-A row itself. ``lag`` supplies the
+  previous visit's fields.
 - The rate/CI math is pure Column expressions (qnorm(0.975) embedded
   as a literal, like the reference's constant).
 """
@@ -21,12 +29,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType, DoubleType, StructField, StructType,
-)
 
 from ..session import local_df
 
@@ -45,91 +49,56 @@ def evaluate_rdts(
 ) -> DataFrame:
     """W9: classify each visit as incident case / not / unknown per
     the RDT flowchart (evaluate_rdts.R:82-135), adding
-    days_since_prev_visit, days_at_risk, incident_case.
+    days_since_prev_visit, days_at_risk, incident_case (double,
+    double, boolean) after the input columns.
 
-    pan/pf results are one of 'Positive'/'Negative'/'' (never NULL).
-    Rows are processed per extid in visit_number order; enrollment
-    (first row) is incident iff either RDT is Positive.
+    Rows are ordered per extid by visit_number. Enrollment (the first
+    row) is incident iff either RDT is Positive. Later rows: pan
+    Positive -> TRUE; pf Negative -> FALSE; pf Positive -> TRUE unless
+    the previous visit was consecutive, pf Positive and treated
+    (coartem 'yes'), where the flag flips the previous visit's; any
+    other result (blank or NULL) -> unknown (NULL). The flip is
+    evaluated as run parity (module docstring): one exchange on
+    extid, two window passes, no Python worker.
     """
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("days_since_prev_visit", DoubleType()),
-            StructField("days_at_risk", DoubleType()),
-            StructField("incident_case", BooleanType()),
-        ]
+    w = Window.partitionBy(extid_col).orderBy(visit_col)
+    lag = lambda c: F.lag(c).over(w)  # noqa: E731
+    lagged = df.select(
+        "*",
+        F.datediff(F.col(date_col), lag(date_col))
+        .cast("double")
+        .alias("days_since_prev_visit"),
+        F.row_number().over(w).alias("__idx"),
+        lag(visit_col).alias("__prev_visit"),
+        lag(pf_col).alias("__prev_pf"),
+        lag(coartem_col).alias("__prev_coartem"),
     )
-
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        """One linear pass over (extid, visit)-sorted rows; state
-        resets at each extid boundary."""
-        n = len(pdf)
-        days_prev: list[float | None] = [None] * n
-        days_risk: list[float | None] = [None] * n
-        incident: list[bool | None] = [None] * n
-        ids = pdf[extid_col].to_numpy()
-        pan = pdf[pan_col].to_numpy()
-        pf = pdf[pf_col].to_numpy()
-        coartem = pdf[coartem_col].to_numpy()
-        vnum = pdf[visit_col].to_numpy()
-        days = pdf[date_col].to_numpy().astype("datetime64[D]").astype("int64")
-        for i in range(n):
-            if i == 0 or ids[i] != ids[i - 1]:
-                incident[i] = bool(pan[i] == "Positive" or pf[i] == "Positive")
-                continue
-            days_prev[i] = float(days[i] - days[i - 1])
-            days_risk[i] = days_prev[i] - 14.0 * (coartem[i - 1] == "yes")
-            if pan[i] == "Positive":
-                incident[i] = True
-            elif pf[i] == "Negative":
-                incident[i] = False
-            elif pf[i] == "Positive":
-                if vnum[i] != vnum[i - 1] + 1:
-                    incident[i] = True  # skipped the previous visit
-                elif incident[i - 1] is not None and not incident[i - 1]:
-                    incident[i] = True  # known clear last visit
-                elif pf[i - 1] != "Positive":
-                    incident[i] = True
-                elif coartem[i - 1] == "yes":
-                    incident[i] = False  # treated ongoing infection
-                else:
-                    incident[i] = True
-            # else: pan blank/Negative and pf blank -> unknown (None)
-        pdf = pdf.copy()
-        pdf["days_since_prev_visit"] = pd.array(days_prev, dtype="Float64")
-        pdf["days_at_risk"] = pd.array(days_risk, dtype="Float64")
-        pdf["incident_case"] = pd.array(incident, dtype="boolean")
-        return pdf
-
-    def run(batches):
-        """mapInPandas driver: batches are consecutive slices of a
-        hash-partitioned, (extid, visit)-sorted partition. An extid
-        can straddle a batch boundary, so the trailing extid of each
-        batch is carried into the next before scanning."""
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = pdf[extid_col].iloc[-1]
-            mask = pdf[extid_col] == last
-            carry = pdf[mask]
-            done = pdf[~mask]
-            if len(done):
-                yield scan(done)
-        if carry is not None and len(carry):
-            yield scan(carry)
-
-    # per-group applyInPandas pays one Python call + DataFrame build
-    # per extid (~millions of tiny groups at scale); instead: hash-
-    # partition by extid, sort within partitions, and stream ONE
-    # sequential scan per Arrow batch. Same single shuffle, ~100x
-    # less Python overhead.
-    return (
-        df.repartition(F.col(extid_col))
-        .sortWithinPartitions(extid_col, visit_col)
-        .mapInPandas(run, schema=out_schema)
+    is_ = lambda c, v: F.col(c).eqNullSafe(v)  # noqa: E731  (NULL -> FALSE)
+    pan_pos, pf_pos = is_(pan_col, "Positive"), is_(pf_col, "Positive")
+    treated = is_("__prev_coartem", "yes")
+    flips = (
+        ~pan_pos
+        & pf_pos
+        & F.coalesce(F.col(visit_col) == F.col("__prev_visit") + 1, F.lit(False))
+        & is_("__prev_pf", "Positive")
+        & treated
+    )
+    idx = F.col("__idx")
+    last_fixed = F.max(F.when(~flips, idx)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return lagged.select(
+        *[F.col(f"`{c}`") for c in df.columns],
+        "days_since_prev_visit",
+        (
+            F.col("days_since_prev_visit")
+            - F.when(treated, F.lit(14.0)).otherwise(F.lit(0.0))
+        ).alias("days_at_risk"),
+        F.when(idx == 1, pan_pos | pf_pos)
+        .when(pan_pos, F.lit(True))
+        .when(is_(pf_col, "Negative"), F.lit(False))
+        .when(pf_pos, (idx - last_fixed) % 2 == 0)
+        .alias("incident_case"),
     )
 
 

@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 
 from . import jobs
 from .operators import dedup as dd
-from .session import local_df
+from .session import _local_footer_schema, local_df
 from .operators import similarity as sim
 from .operators import skipping as skp
 from .operators import text as tx
@@ -63,15 +63,24 @@ def _register(name: str, sql: str | None):
 _SCHEMA_MEMO: dict[str, T.StructType] = {}
 
 
+def _table_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The memoized schema of the table at ``path``. The first use
+    takes it from the local footer (``session._local_footer_schema``,
+    typed as Spark's inference types it) and runs no Spark job; a
+    remote path, or a footer it cannot map (nanosecond timestamps, read
+    as long under ``nanosAsLong``), falls back to Spark's inference."""
+    st = _SCHEMA_MEMO.get(path)
+    if st is None:
+        st = _local_footer_schema(path, spark=spark) or spark.read.parquet(path).schema
+        _SCHEMA_MEMO[path] = st
+    return st
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _events(spark, sf_dir)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    st = _SCHEMA_MEMO.get(path)
-    if st is None:
-        st = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[path] = st
-    return spark.read.schema(st).parquet(path)
+    return spark.read.schema(_table_schema(spark, path)).parquet(path)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,11 +91,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP(MICROS). Normalize both to one stable TimestampType
     column so every consumer sees one schema."""
     path = os.path.join(sf_dir, "events.parquet")
-    st = _SCHEMA_MEMO.get(path)
-    if st is None:
-        st = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[path] = st
-    df = spark.read.schema(st).parquet(path)
+    df = spark.read.schema(_table_schema(spark, path)).parquet(path)
     if isinstance(df.schema["ts"].dataType, T.LongType):
         # integer division: epoch-nanos (~1.7e18) exceed double's 53-bit
         # exact range, so `/ 1000` would round ~12% of rows to a
@@ -165,10 +170,8 @@ def _pin(df: DataFrame, *scratch_paths: str) -> DataFrame:
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming reader over events.parquet handling both historical
     ``ts`` encodings (see ``_events``). ``readStream`` needs an explicit
-    schema, so peek at the batch footer first — a metadata-only read."""
-    ts_type = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema[
-        "ts"
-    ].dataType
+    schema, so take the batch table's memoized schema first."""
+    ts_type = _table_schema(spark, os.path.join(sf_dir, "events.parquet"))["ts"].dataType
     ts_is_long = isinstance(ts_type, T.LongType)
     # mirror the batch-peeked type exactly (BIGINT / TIMESTAMP_NTZ /
     # TIMESTAMP) — hardcoding NTZ would break on an adjustedToUTC file
@@ -2300,8 +2303,9 @@ def _rdt_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def rdt_state_machine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # W9: applyInPandas per-extid ordered scan (evaluate_rdts.R:82-135);
-    # the oracle re-derives the recurrence as a recursive CTE.
+    # W9: per-extid ordered flowchart as window passes (run parity,
+    # evaluate_rdts.R:82-135); the oracle re-derives the recurrence as
+    # a recursive CTE.
     evaluated = st.evaluate_rdts(_rdt_cohort(spark, sf_dir))
     return evaluated.select(
         "extid", "visit_number", "days_since_prev_visit", "days_at_risk", "incident_case"
@@ -3188,12 +3192,13 @@ def drop_na_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 198-254,264-322) re-expressed over the TPC-H-ish tables — V1 goals
 # from the baseline roster, V2-V4 cascaded from visit facts with
 # departure/refusal removal, a visit×key skeleton, per-key fill-down,
-# and an n_distinct rollup. One registered query composes J2, J9, W4,
-# anti/left-join filters and exact distinct aggregation.
+# and an n_distinct rollup. ``goals_cascade`` composes J2, ordered and
+# whole-partition windows over one exchange and exact distinct
+# aggregation; ``goals_cascade_deep`` keeps the literal skeleton +
+# W4 fill-down shape.
 # ===========================================================================
 
 from .operators import multimodal as mm  # noqa: E402
-from .operators import reshape as rs  # noqa: E402
 
 
 @_register(
@@ -3248,14 +3253,30 @@ from .operators import reshape as rs  # noqa: E402
     """,
 )
 def goals_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Household targets per visit and cluster (00.store_se_goals.R:
+    198-254,264-322): V1 from the baseline roster, V2-V4 cascaded
+    from each household's first three visits, minus visits on or after
+    its departure and minus refusing households, skeleton-filled so a
+    household counts at every visit from its first surviving one on.
+
+    Plan shape: ONE orders pass. Visit order (``row_number``), the
+    departure time (a conditional ``min``) and the refusal flag (a
+    conditional ``max``) are window functions over one o_custkey
+    exchange and one sort. The skeleton + fill-down collapses to one
+    per-household aggregate: a roster household has one cluster, so
+    its filled cluster is non-NULL exactly at the visits from its
+    first surviving visit on — ``explode(sequence(first + 1, 4))``
+    emits those rows, and one counting aggregate reads the window
+    output once. The roster drops the dropped-household list by its
+    predicate (``c_custkey % 50 <> 0``), which is the oracle's NOT IN
+    semantics: a NULL key leaves too.
+    """
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
     o = _t(spark, sf_dir, "orders")
 
-    # baseline roster minus the dropped-household list (v0_dropped)
-    dropped = c.filter(F.col("c_custkey") % 50 == 0).select("c_custkey")
     base = (
-        c.join(dropped, "c_custkey", "left_anti")
+        c.filter(F.col("c_custkey") % 50 != 0)
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
         .select("c_custkey", F.col("n_nationkey").alias("cluster"))
     )
@@ -3265,50 +3286,44 @@ def goals_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("V1").alias("visit"), "cluster", "hh_target")
     )
 
-    # visit facts cascaded to visit+1, capped at V4 (stop cascading)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    seq = o.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 3)
-    facts = seq.join(base, seq["o_custkey"] == base["c_custkey"]).select(
-        F.concat(F.lit("V"), (F.col("rn") + 1).cast("string")).alias("visit"),
-        F.col("o_custkey").alias("custkey"),
-        F.col("o_orderdate").alias("start_time"),
-        "cluster",
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    departs = (F.col("o_orderstatus") == "F") & (F.col("o_orderpriority") == "5-LOW")
+    refuses = (F.col("o_orderpriority") == "1-URGENT") & (F.col("o_totalprice") < 20000.0)
+    seq = o.select(
+        "o_custkey",
+        "o_orderdate",
+        F.row_number().over(w).alias("rn"),
+        F.min(F.when(departs, F.col("o_orderdate"))).over(whole).alias("departure_time"),
+        F.max(refuses).over(whole).alias("refused"),
     )
-
-    # departures: facts strictly before the departure time survive
-    departures = (
-        o.filter((F.col("o_orderstatus") == "F") & (F.col("o_orderpriority") == "5-LOW"))
-        .groupBy(F.col("o_custkey").alias("custkey"))
-        .agg(F.min("o_orderdate").alias("departure_time"))
-    )
-    refusals = (
-        o.filter((F.col("o_orderpriority") == "1-URGENT") & (F.col("o_totalprice") < 20000.0))
-        .select(F.col("o_custkey").alias("custkey"))
-        .distinct()
-    )
-    curated = (
-        facts.join(departures, "custkey", "left")
-        .filter(
-            (F.col("start_time") < F.col("departure_time"))
+    # visit facts cascaded to visit+1, capped at V4; facts strictly
+    # before the departure time survive; refusing households leave
+    curated = seq.filter(
+        (F.col("rn") <= 3)
+        & (
+            (F.col("o_orderdate") < F.col("departure_time"))
             | F.col("departure_time").isNull()
         )
-        .join(refusals, "custkey", "left_anti")
-        .select("visit", "custkey", "cluster")
+        & ~F.coalesce(F.col("refused"), F.lit(False))
     )
-
-    # visit×key skeleton + per-key fill-down (expand_grid + tidyr::fill)
-    skeleton = rs.scaffold(curated.select("custkey").distinct(), ["V2", "V3", "V4"], "visit")
-    filled = W.fill_down(
-        skeleton.join(curated, ["visit", "custkey"], "left"),
-        ["cluster"],
-        partition_by=["custkey"],
-        order_by=["visit"],
+    # the household roster is a dimension: broadcast, so the window's
+    # o_custkey partitioning carries the per-household aggregate
+    first = (
+        curated.join(F.broadcast(base), curated["o_custkey"] == base["c_custkey"])
+        .groupBy("o_custkey", "cluster")
+        .agg(F.min("rn").alias("first_rn"))
     )
-    cascade = (
-        filled.filter(F.col("cluster").isNotNull())
-        .groupBy("visit", "cluster")
-        .agg(F.countDistinct("custkey").alias("hh_target"))
+    filled = first.select(
+        "o_custkey",
+        "cluster",
+        F.explode(F.sequence(F.col("first_rn") + 1, F.lit(4))).alias("_v"),
     )
+    # (o_custkey, cluster) is unique in ``first`` and each of its rows
+    # emits distinct visits: a plain count IS the distinct count
+    cascade = filled.groupBy(
+        F.concat(F.lit("V"), F.col("_v").cast("string")).alias("visit"), "cluster"
+    ).agg(F.count(F.lit(1)).alias("hh_target"))
     return v1.unionByName(cascade.select("visit", "cluster", "hh_target"))
 
 
@@ -5815,60 +5830,45 @@ def icf_verification_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     four cohorts fan out with aging day-counts and an ORDERED aging
     reclassification (>30 before >20, the Rmd's case_when order).
 
-    Plan shape: events scanned once per stream with pushed event_type
-    filters, keep-last via one window shuffle each, cohort fan-out is
-    UNION ALL over the same two frames (Spark reuses the exchanges),
-    aging buckets are pure Column case_when — no UDFs, no collects.
+    Plan shape: ONE events scan (IsNotNull + IN on event_type pushed
+    to it) and ONE aggregate on user_id. Both keep-last picks are
+    ``max`` of a (ts, event_id) struct, one per stream: struct order
+    is the window's ``ts DESC, event_id DESC`` with NULLs last. A
+    participant is on the roster iff the signup pick is non-NULL; a
+    NULL ICF pick is the anti-join side, "ICF Unverified", aged from
+    the roster row. Every cohort is then one CASE over that row: no
+    window, no join, no union, no UDF, no collect.
     """
     ev = _t(spark, sf_dir, "events")
     run_date = F.lit("2024-02-05").cast("date")
-
-    def keep_last(df):
-        w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+    kind = F.col("event_type")
+    latest = lambda cond: F.max(F.when(cond, F.struct("ts", "event_id")))  # noqa: E731
+    picks = (
+        ev.filter(kind.isNotNull() & kind.isin("signup", "click", "purchase"))
+        .groupBy("user_id")
+        .agg(
+            latest(kind == "signup").alias("roster"),
+            latest(kind.isin("click", "purchase")).alias("icf"),
         )
-
-    roster = keep_last(ev.filter(F.col("event_type") == "signup")).select(
-        "user_id", F.col("ts").alias("roster_ts")
+        .filter(F.col("roster").isNotNull())
     )
-    icf = keep_last(
-        ev.filter(F.col("event_type").isin("click", "purchase")).withColumn(
-            "icf_stat",
-            F.when(F.pmod("event_id", F.lit(3)) == 0, "Rectification")
-            .when(F.pmod("event_id", F.lit(3)) == 1, "Resolved-Archived")
-            .otherwise("Lost-Not Found"),
-        )
-    ).select("user_id", "ts", "icf_stat")
-
-    verified = icf.join(roster, "user_id")
-    aging = F.datediff(run_date, F.col("ts").cast("date")).cast("bigint")
-    cohorts = (
-        verified.filter(F.col("icf_stat") == "Rectification")
-        .select("user_id", F.lit("ICF Unresolved").alias("metric"), aging.alias("aging_days"))
-        .unionByName(
-            verified.filter(F.col("icf_stat") == "Resolved-Archived").select(
-                "user_id",
-                F.lit("ICF Resolved").alias("metric"),
-                F.lit(None).cast("bigint").alias("aging_days"),
-            )
-        )
-        .unionByName(
-            verified.filter(F.col("icf_stat") == "Lost-Not Found").select(
-                "user_id", F.lit("ICF Missing").alias("metric"), aging.alias("aging_days")
-            )
-        )
-        .unionByName(
-            roster.join(icf, "user_id", "left_anti").select(
-                "user_id",
-                F.lit("ICF Unverified").alias("metric"),
-                F.datediff(run_date, F.col("roster_ts").cast("date"))
-                .cast("bigint")
-                .alias("aging_days"),
-            )
-        )
+    stat = F.pmod(F.col("icf.event_id"), F.lit(3))
+    unverified = F.col("icf").isNull()
+    metric = (
+        F.when(unverified, "ICF Unverified")
+        .when(stat == 0, "ICF Unresolved")
+        .when(stat == 1, "ICF Resolved")
+        .otherwise("ICF Missing")
+    )
+    aging_ts = (
+        F.when(unverified, F.col("roster.ts"))
+        .when(stat == 1, F.lit(None))
+        .otherwise(F.col("icf.ts"))
+    )
+    cohorts = picks.select(
+        "user_id",
+        metric.alias("metric"),
+        F.datediff(run_date, aging_ts.cast("date")).cast("bigint").alias("aging_days"),
     )
     a, m = F.col("aging_days"), F.col("metric")
     return cohorts.select(
@@ -6093,12 +6093,15 @@ def pharmacy_ledger_reconciliation(spark: SparkSession, sf_dir: str) -> DataFram
     into one wide (run_date, drug) ledger with replace_na(0) across
     every metric and a derived net balance.
 
-    Plan shape: ONE lineitem scan feeds all four cohorts (Spark reuses
-    the exchange on the shared (run_date, drug) grouping); the
-    reduce-left-join chain is three joins on the same keys, so AQE
-    plans them as one shuffle lineage; zero-fill and net are Column
-    exprs. At 100 TB this is 4 partial aggregates + 3 co-partitioned
-    joins — no data-size explosion anywhere.
+    Plan shape: ONE lineitem scan and ONE aggregate on (run_date,
+    drug). Each cohort is a conditional ``sum`` of the same grouping,
+    not a filtered aggregate of its own: Spark reuses an exchange only
+    for identical subplans, so four filtered aggregates scan lineitem
+    four times. A group is in the ledger iff it has an arrival row
+    (the left-join chain starts from ``arrival``); a cohort with no
+    rows in the group sums to NULL, the left join's miss. Zero-fill and net are Column
+    exprs. At 100 TB this is one partial aggregate and one shuffle of
+    the (month, drug) groups.
     """
     li = _t(spark, sf_dir, "lineitem")
     base = li.select(
@@ -6116,19 +6119,19 @@ def pharmacy_ledger_reconciliation(spark: SparkSession, sf_dir: str) -> DataFram
         "l_quantity",
     )
 
-    def cohort(cond, out):
-        return (
-            base.filter(cond)
-            .groupBy("run_date", "drug")
-            .agg(F.sum("l_quantity").alias(out))
-        )
-
     rf, ls = F.col("l_returnflag"), F.col("l_linestatus")
+    arrives = rf == "N"
+    cohort = lambda cond: F.sum(F.when(cond, F.col("l_quantity")))  # noqa: E731
     ledger = (
-        cohort(rf == "N", "arrival")
-        .join(cohort(rf == "A", "dispatch"), ["run_date", "drug"], "left")
-        .join(cohort((rf == "R") & (ls == "F"), "unused_return"), ["run_date", "drug"], "left")
-        .join(cohort((rf == "R") & (ls == "O"), "unusable_return"), ["run_date", "drug"], "left")
+        base.groupBy("run_date", "drug")
+        .agg(
+            F.count(F.when(arrives, 1)).alias("_arrivals"),
+            cohort(arrives).alias("arrival"),
+            cohort(rf == "A").alias("dispatch"),
+            cohort((rf == "R") & (ls == "F")).alias("unused_return"),
+            cohort((rf == "R") & (ls == "O")).alias("unusable_return"),
+        )
+        .filter(F.col("_arrivals") > 0)
     )
     z = lambda c: F.coalesce(F.col(c), F.lit(0.0))  # noqa: E731
     return ledger.select(

@@ -76,9 +76,9 @@ def parquet_scan(spark: SparkSession, path: str, partition_cols=()) -> DataFrame
     as the engine wrote them (e.g. ``[("cid", "int")]``).
 
     Falls back to plain inference for remote schemes, empty dirs, or
-    any pyarrow hiccup. Not for timestamp-bearing EXTERNAL data —
-    arrow→Spark timestamp mapping is reader-config-dependent; engine
-    indexes store only ints/doubles/strings/arrays."""
+    any pyarrow hiccup. Timestamps map as Spark's own inference does
+    (module helper below); nanosecond timestamps fall back, because
+    ``spark.sql.legacy.parquet.nanosAsLong`` reads them as long."""
     st = _local_footer_schema(path, partition_cols, spark)
     if st is None:
         return spark.read.parquet(path)
@@ -86,27 +86,53 @@ def parquet_scan(spark: SparkSession, path: str, partition_cols=()) -> DataFrame
 
 
 def _local_footer_schema(path: str, partition_cols=(), spark=None):
+    """Spark schema of the local parquet file ``path`` (or of the
+    first data file under the directory ``path``) from its footer,
+    typed as ``spark.read.parquet(path).schema`` would be, or ``None``
+    when that cannot be told without asking Spark.
+
+    A tz-naive arrow timestamp is a parquet TIMESTAMP with
+    isAdjustedToUTC=false, which Spark infers as TIMESTAMP_NTZ while
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` is on (the
+    default); a tz-aware one is TIMESTAMP. Nanosecond (and INT96,
+    which arrow reads as nanoseconds) timestamps return ``None``: the
+    session reads them as long (``nanosAsLong``). Types arrow cannot
+    map (unsigned ints, dictionaries, date64, ...) raise inside
+    ``from_arrow_schema`` and return ``None`` too."""
     from .operators.skipping import _local_root, _walk_local_files
 
     local = _local_root(path, spark)
     if local is None:
         return None
     try:
-        data = next(
-            (
-                f
-                for f, _, _ in _walk_local_files(local)
-                if f.endswith(".parquet")
-                and not os.path.basename(f).startswith(("_", "."))
-            ),
-            None,
-        )
+        if os.path.isfile(local):
+            data = local
+        else:
+            data = next(
+                (
+                    f
+                    for f, _, _ in _walk_local_files(local)
+                    if f.endswith(".parquet")
+                    and not os.path.basename(f).startswith(("_", "."))
+                ),
+                None,
+            )
         if data is None:
             return None
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        st = from_arrow_schema(pq.read_schema(data))
+        arrow = pq.read_schema(data)
+        text = str(arrow)
+        ntz = False
+        if "timestamp[" in text:
+            if "timestamp[ns" in text or spark is None:
+                return None
+            ntz = (
+                spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true").lower()
+                == "true"
+            )
+        st = from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
     except Exception:
         return None
     from pyspark.sql.types import _parse_datatype_string
@@ -146,6 +172,10 @@ def get_spark(
         # --- python interop: Arrow batches for the few pandas ops ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # pyspark's DataFrame call-site capture costs 3 py4j round
+        # trips per Column-function call (and imports IPython on the
+        # first); plan builders make thousands of such calls
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # --- IO: vectorized parquet + pushdown are default-on; keep
         #     session timezone pinned so date/ts semantics are stable ---
         .config("spark.sql.session.timeZone", "UTC")

@@ -50,6 +50,20 @@ def _norm(v):
     return v
 
 
+def count_jobs(spark, fn) -> int:
+    """Spark jobs started by ``fn()``, counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def assert_frames_match(spark_df, duck_rel, check_types: bool = False):
     """Order-insensitive, column-name-sorted comparison of a Spark
     DataFrame against a DuckDB relation — mirrors the driver's

@@ -717,3 +717,17 @@ def test_corr_moments_single_scan_single_shuffle(spark):
     read = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     # only the four source columns are read from the 16-column table
     assert read and "l_comment" not in read[0] and "l_shipdate" not in read[0]
+
+
+def test_report_refresh_plans_start_no_python_worker(spark):
+    """The trial reports and the RDT queries run JVM-only: no Python
+    exec node (row UDF, Arrow UDF, mapInPandas/mapInArrow) anywhere in
+    their plans, so refreshing them never starts a Python worker."""
+    import re
+
+    for name in (
+        "rdt_state_machine", "rdt_incidence_rates", "goals_cascade",
+        "resolution_delete_set", "efficacy_status_matrix", "icf_verification_metrics",
+    ):
+        plan = _plan(QUERIES[name](spark, SF_DIR))
+        assert not re.search(r"Python|InPandas|InArrow", plan), name

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from bohemia_kenya_data_pipeline_spark.jobs import retrieval as rt
 from bohemia_kenya_data_pipeline_spark.operators import similarity as sim
+from tests.conftest import count_jobs as _count_jobs
 
 
 def _toy_corpus(spark, n=400, dim=8):
@@ -750,20 +751,6 @@ def test_maintain_pq_index_policy_ticks(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # driver-side index metadata: job counts and probe parity
 # ---------------------------------------------------------------------------
-
-
-def _count_jobs(spark, fn):
-    """Spark jobs started by ``fn()``, counted under a fresh job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.sc().clearJobGroup()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _served_pq_index(spark, tmp_path, name):

@@ -556,3 +556,104 @@ def test_sketch_quantiles_rejects_out_of_range_probes(spark):
     # q = 1.0 is legal and answers the max's bin upper edge
     got = st.sketch_quantiles(sk, [1.0], 0.0, 100.0, 10).collect()
     assert got[0].approx_value == 100.0
+
+
+# ---------------------------------------------------------------------------
+# randomized differential test against a pure-Python flowchart
+# ---------------------------------------------------------------------------
+
+
+def _flowchart(rows):
+    """The RDT flowchart (evaluate_rdts.R:82-135) as a literal ordered
+    loop per extid: {(extid, visit): (incident, days_prev, days_risk)}.
+    A missing date gives missing day counts."""
+    by_ext: dict = {}
+    for r in rows:
+        by_ext.setdefault(r[0], []).append(r)
+    out = {}
+    for ext, rs in by_ext.items():
+        prev = prev_inc = None
+        for r in sorted(rs, key=lambda r: r[1]):
+            _, visit, day, pan, pf, coartem = r
+            if prev is None:
+                inc, dp, dr = pan == "Positive" or pf == "Positive", None, None
+            else:
+                dp = None if day is None or prev[2] is None else float((day - prev[2]).days)
+                dr = None if dp is None else dp - (14.0 if prev[5] == "yes" else 0.0)
+                if pan == "Positive":
+                    inc = True
+                elif pf == "Negative":
+                    inc = False
+                elif pf == "Positive":
+                    if visit != prev[1] + 1:
+                        inc = True
+                    elif prev_inc is False:
+                        inc = True
+                    elif prev[4] != "Positive":
+                        inc = True
+                    elif prev[5] == "yes":
+                        inc = False
+                    else:
+                        inc = True
+                else:
+                    inc = None
+            out[(ext, visit)] = (inc, dp, dr)
+            prev, prev_inc = r, inc
+    return out
+
+
+def _random_cohort(rng, n_ext):
+    """Visit histories that stress every branch: long treated pf+
+    alternation runs, a Positive pan inside a run, visit gaps, blank
+    and NULL results, NULL dates and single-visit extids."""
+    results = ["Positive", "Negative", "", None]
+    rows = []
+    for e in range(n_ext):
+        n = rng.choice([1, 1, 2, 3, 5, 8, 12])
+        visit, day = rng.randint(1, 3), D(2024, 1, 1) + datetime.timedelta(rng.randint(0, 30))
+        run = rng.random() < 0.5  # a treated pf+ alternation run
+        for _ in range(n):
+            if run and rng.random() < 0.85:
+                pan = "Positive" if rng.random() < 0.1 else rng.choice(["", "Negative"])
+                pf, coartem = "Positive", "yes"
+            else:
+                pan, pf = rng.choice(results), rng.choice(results)
+                coartem = rng.choice(["yes", "no", None])
+            rows.append(
+                (f"e{e}", visit, None if rng.random() < 0.05 else day, pan, pf, coartem)
+            )
+            visit += 1 if rng.random() < 0.85 else rng.randint(2, 3)
+            day += datetime.timedelta(rng.randint(20, 40))
+    return rows
+
+
+def test_evaluate_rdts_matches_python_flowchart_randomized(spark):
+    import random
+
+    rng = random.Random(20240905)
+    rows = _random_cohort(rng, 400)
+    want = _flowchart(rows)
+    # the generator must actually produce the shapes under test: a
+    # treated pf+ chain of >= 4 consecutive visits, a Positive pan
+    # inside such a chain, a visit gap and single-visit extids
+    longest = cur = 0
+    pan_in_run = gap = False
+    prev = None
+    for r in sorted(rows, key=lambda r: (r[0], r[1])):
+        same = prev is not None and prev[0] == r[0]
+        gap |= same and r[1] > prev[1] + 1
+        chained = (
+            same and r[1] == prev[1] + 1 and prev[4] == r[4] == "Positive"
+            and prev[5] == "yes"
+        )
+        cur = cur + 1 if chained else 1
+        longest = max(longest, cur)
+        pan_in_run |= chained and r[3] == "Positive"
+        prev = r
+    sizes = {}
+    for r in rows:
+        sizes[r[0]] = sizes.get(r[0], 0) + 1
+    assert longest >= 4 and pan_in_run and gap and 1 in sizes.values()
+    assert any(v is False for v, _, _ in want.values())
+    got = _run(spark, rows)
+    assert got == want
