@@ -41,87 +41,17 @@ def _centroid_sidecar(index_path: str) -> str:
     return index_path.rstrip("/") + "__centroids"
 
 
-def _assign_for_index(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str,
-    id_col: str,
-    assign: str,
-) -> DataFrame:
-    """(id, vec, cid) for the index write — the one full-corpus pass.
-
-    ``assign="auto"`` picks the kernel by C×D: below
-    ``similarity.ARROW_ASSIGN_MIN_CXD`` the expression fold (JVM-side,
-    no Arrow transfer — right for toy/bench centroid counts and the
-    regime every oracle covers); at or above it the Arrow numpy-argmax
-    kernel (:func:`~..operators.similarity.assign_centroids_arrow`) —
-    at production centroid counts the fold is O(C×D) INTERPRETED per
-    corpus row, the exact island class the r6 Arrow work retired on
-    the scoring side (VERDICT r7 ask 1). Both kernels implement the
-    identical contract (unit-normalized argmax dot, ties → smaller
-    cid); parity is hash-asserted in ``tests/test_retrieval_index.py``.
-    """
-    if assign == "auto":
-        cxd = len(centroids) * len(centroids[0])
-        assign = "arrow" if cxd >= sim.ARROW_ASSIGN_MIN_CXD else "fold"
-    if assign == "arrow":
-        return sim.assign_centroids_arrow(
-            corpus.select(id_col, vec_col), centroids, vec_col, id_col
-        )
-    if assign != "fold":
-        raise ValueError(
-            f"assign must be 'auto', 'fold' or 'arrow', got {assign!r}"
-        )
-    # one SQL parse for literal + cast + argmax fold (r15; same tree,
-    # same interpreted execution — only plan construction changes)
-    vec_sql = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
-    return (
-        sim._drop_null_vecs(corpus, vec_col)
-        .select(id_col, vec_col)
-        .withColumn(
-            "cid",
-            F.expr(
-                sim._nearest_cid_sql(
-                    vec_sql, sim._centroid_literal_sql(centroids)
-                )
-            ),
-        )
-    )
-
-
-def _resolve_centroids(
-    corpus: DataFrame,
-    centroids: list[list[float]] | None,
-    n_centroids: int,
-    n_iters: int,
-    train_fraction: float | None,
-    vec_col: str,
-    id_col: str,
-    train: str,
-) -> list[list[float]]:
-    """Accept pre-trained centroids or train, kernel per ``train``
-    ("auto" switches on C against the threshold's C x 64 reference
-    shape — dim is not known without touching the data, and C alone
-    drives the fold's per-row cost)."""
-    if centroids is not None:
-        return centroids
-    if train == "auto":
-        train = (
-            "arrow" if n_centroids * 64 >= sim.ARROW_ASSIGN_MIN_CXD else "fold"
-        )
-    if train not in ("fold", "arrow"):
-        raise ValueError(f"train must be 'auto', 'fold' or 'arrow', got {train!r}")
-    trainer = (
-        sim.ivf_train_centroids_arrow if train == "arrow" else sim.ivf_train_centroids
-    )
-    return trainer(
-        corpus,
-        vec_col,
-        id_col,
-        n_centroids=n_centroids,
-        n_iters=n_iters,
-        train_fraction=train_fraction,
-    )
+def _write_centroids(
+    spark: SparkSession, index_path: str, centroids: list[list[float]]
+) -> None:
+    """Finish a (re)written index: drop tombstones left by the index it
+    replaced and write the centroid sidecar."""
+    _drop_tombstones(spark, index_path)
+    local_df(
+        spark,
+        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+        "cid INT, cv ARRAY<DOUBLE>",
+    ).coalesce(1).write.mode("overwrite").parquet(_centroid_sidecar(index_path))
 
 
 def build_ann_index(
@@ -133,32 +63,21 @@ def build_ann_index(
     train_fraction: float | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
-    train: str = "auto",
 ) -> list[list[float]]:
     """Train (or accept) centroids, assign every corpus vector, write
     the index partitioned by ``cid``, persist the centroid sidecar.
     One full pass over the corpus; the shuffle is the partitioned
-    write's file routing. Assignment kernel per ``assign`` (see
-    :func:`_assign_for_index`; "auto" = Arrow above the C×D
-    threshold); implicit training picks its kernel the same way via
-    ``train`` (the Arrow trainer replaces each Lloyd round's
-    interpreted fold + posexplode shuffle with one partial-sum
-    mapInPandas pass — same fixed point, see
-    ``similarity.ivf_train_centroids_arrow``). Returns the centroids."""
-    centroids = _resolve_centroids(
-        corpus, centroids, n_centroids, n_iters, train_fraction,
-        vec_col, id_col, train,
-    )
-    assigned = _assign_for_index(corpus, centroids, vec_col, id_col, assign)
+    write's file routing. Training and assignment pick their kernel by
+    C×D (``similarity.assign_centroids``: the Arrow kernel at
+    production centroid counts, the expression fold below). Returns
+    the centroids."""
+    if centroids is None:
+        centroids = sim.ivf_train_centroids(
+            corpus, vec_col, id_col, n_centroids, n_iters, train_fraction
+        )
+    assigned = sim.assign_centroids(corpus.select(id_col, vec_col), centroids, vec_col)
     assigned.write.mode("overwrite").partitionBy("cid").parquet(index_path)
-    spark = corpus.sparkSession
-    _drop_stale_tombstones(spark, index_path)
-    local_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cid INT, cv ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(_centroid_sidecar(index_path))
+    _write_centroids(corpus.sparkSession, index_path, centroids)
     return centroids
 
 
@@ -309,10 +228,12 @@ def delete_from_index(
     deleted id via ``extend_ann_index`` / ``extend_ivfpq_index``
     triggers that compaction implicitly first (the stale stored row
     must not coexist with the re-added one), so extension stays exact
-    in every case and delta-sized in the steady state."""
-    deleted.select(F.col(id_col).alias("id")).distinct().write.mode(
-        "append"
-    ).parquet(_tombstone_sidecar(index_path))
+    in every case and delta-sized in the steady state. Ids are
+    appended as given, one write job: every reader dedupes the
+    metadata-sized set on the driver (:func:`_index_tombstones`)."""
+    deleted.select(F.col(id_col).alias("id")).write.mode("append").parquet(
+        _tombstone_sidecar(index_path)
+    )
 
 
 def _flag_tombstoned(df: DataFrame, spark, id_col: str, tombs) -> DataFrame:
@@ -358,15 +279,13 @@ def _compact_if_readmitting(new_rows: DataFrame, index_path: str, id_col: str) -
         _compact(spark, index_path, id_col, tombs)
 
 
-def _drop_stale_tombstones(spark: SparkSession, index_path: str) -> None:
-    """A rebuilt index starts clean: tombstones from a previous index
-    at the same path must not hide the new corpus."""
+def _drop_tombstones(spark: SparkSession, index_path: str) -> None:
+    """Delete the tombstone sidecar, if any: after a compaction folded
+    it in, and when a rebuilt index starts clean (tombstones from a
+    previous index at the same path must not hide the new corpus)."""
     jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(_tombstone_sidecar(index_path))
-    fs = p.getFileSystem(conf)
-    if fs.exists(p):
-        fs.delete(p, True)
+    p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(p, True)
 
 
 def compact_index(
@@ -390,10 +309,7 @@ def _compact(spark: SparkSession, index_path: str, id_col: str, tombs) -> None:
     stage = index_path.rstrip("/") + "__stage"
     rows.write.mode("overwrite").partitionBy("cid").parquet(stage)
     _swap_in(spark, index_path, stage)
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(index_path).getFileSystem(conf)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(_tombstone_sidecar(index_path)), True)
+    _drop_tombstones(spark, index_path)
 
 
 def index_stats(
@@ -435,7 +351,6 @@ def index_ingest_drift(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     eps: float = 1e-4,
-    assign: str = "auto",
 ) -> DataFrame:
     """The rebuild-cadence gate the extend docstrings defer to, made
     concrete: PSI between the LIVE index's per-cid share and an
@@ -455,17 +370,16 @@ def index_ingest_drift(
     mirroring ``stats.population_stability``)."""
     return _ingest_drift(
         spark, index_path, new_rows, load_ann_centroids(spark, index_path),
-        _UNREAD, vec_col, id_col, eps, assign,
+        _UNREAD, vec_col, id_col, eps,
     )
 
 
 def _ingest_drift(
-    spark, index_path, new_rows, centroids, tombs, vec_col, id_col, eps=1e-4,
-    assign="auto",
+    spark, index_path, new_rows, centroids, tombs, vec_col, id_col, eps=1e-4
 ) -> DataFrame:
     spine = local_df(spark, [(i,) for i in range(len(centroids))], "cid INT")
     live = _index_stats(spark, index_path, id_col, tombs).select("cid", "live_rows")
-    assigned = _assign_for_index(new_rows, centroids, vec_col, id_col, assign)
+    assigned = sim.assign_centroids(new_rows.select(vec_col), centroids, vec_col)
     batch = assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("batch_rows"))
     # both sides are C-row frames: broadcast them onto the literal spine
     j = (
@@ -498,8 +412,6 @@ def retrain_index(
     n_iters: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
-    kernel: str = "auto",
 ) -> list[list[float]]:
     """Re-center a plain ANN index on its own LIVE stored vectors:
     warm-start Lloyd from the sidecar centroids
@@ -535,18 +447,13 @@ def retrain_index(
         id_col,
     )
     new_cents = sim.ivf_refine_centroids(
-        live, centroids, vec_col, id_col, n_iters=n_iters, kernel=kernel
+        live, centroids, vec_col, id_col, n_iters=n_iters
     )
-    assigned = _assign_for_index(live, new_cents, vec_col, id_col, assign)
+    assigned = sim.assign_centroids(live, new_cents, vec_col)
     stage = index_path.rstrip("/") + "__stage"
     assigned.write.mode("overwrite").partitionBy("cid").parquet(stage)
     _swap_in(spark, index_path, stage)
-    _drop_stale_tombstones(spark, index_path)
-    local_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(new_cents)],
-        "cid INT, cv ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(_centroid_sidecar(index_path))
+    _write_centroids(spark, index_path, new_cents)
     return new_cents
 
 
@@ -697,7 +604,7 @@ def _maintain_tick(
                 _compact(spark, index_path, id_col, tombs)
                 tombs = None
             codebooks = load_pq_codebooks(spark, index_path) if pq_layout else None
-            _append(delta, index_path, centroids, codebooks, vec_col, id_col, "auto")
+            _append(delta, index_path, centroids, codebooks, vec_col, id_col)
             report["extended"] = True
     ids = parquet_scan(spark, index_path, [("cid", "int")]).select(id_col)
     stored, dead = (
@@ -720,13 +627,12 @@ def _append(
     codebooks: list[list[list[float]]] | None,
     vec_col: str,
     id_col: str,
-    assign: str,
 ) -> None:
     """Assign ``new_rows`` against the index's centroids — and, for
     the IVF-PQ layout (``codebooks`` given), PQ-encode them, carrying
     the raw vector iff the index already stores it — then append into
     the existing ``cid`` partitions."""
-    out = _assign_for_index(new_rows, centroids, vec_col, id_col, assign)
+    out = sim.assign_centroids(new_rows.select(id_col, vec_col), centroids, vec_col)
     if codebooks is not None:
         st = _local_footer_schema(index_path)
         store_vec = vec_col in (
@@ -743,7 +649,6 @@ def extend_ann_index(
     index_path: str,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
 ) -> None:
     """Incrementally index new vectors: assign against the SIDECAR
     centroids (no retraining, no rebuild) and append into the existing
@@ -758,7 +663,7 @@ def extend_ann_index(
     (``stats.population_stability``, embedding drift)."""
     _compact_if_readmitting(new_rows, index_path, id_col)
     centroids = load_ann_centroids(new_rows.sparkSession, index_path)
-    _append(new_rows, index_path, centroids, None, vec_col, id_col, assign)
+    _append(new_rows, index_path, centroids, None, vec_col, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -797,13 +702,11 @@ def build_ivfpq_index(
     train_fraction: float | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
-    train: str = "auto",
     store_vec: bool = False,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """The 100 TB vector-store layout: one corpus pass assigns every
-    vector to its nearest centroid (Arrow kernel above the C x D
-    threshold, same as :func:`build_ann_index`) AND PQ-encodes it, then
+    vector to its nearest centroid (kernel by C x D, same as
+    :func:`build_ann_index`) AND PQ-encodes it, then
     writes ``(id, pq_code)`` partitioned by ``cid`` — the stored row is
     M small ints (8 bytes at M=8) instead of dim floats (256 bytes at
     dim=64 float32), a ~32x scan-footprint cut ON TOP of the
@@ -821,25 +724,20 @@ def build_ivfpq_index(
     is self-describing, queries need no training state. Returns
     ``(centroids, codebooks)``.
     """
-    centroids = _resolve_centroids(
-        corpus, centroids, n_centroids, n_iters, train_fraction,
-        vec_col, id_col, train,
-    )
+    if centroids is None:
+        centroids = sim.ivf_train_centroids(
+            corpus, vec_col, id_col, n_centroids, n_iters, train_fraction
+        )
     if codebooks is None:
         codebooks = sim.pq_train_codebooks(
             corpus, n_subspaces, n_codewords, vec_col=vec_col
         )
-    assigned = _assign_for_index(corpus, centroids, vec_col, id_col, assign)
+    assigned = sim.assign_centroids(corpus.select(id_col, vec_col), centroids, vec_col)
     extra = ("cid", vec_col) if store_vec else ("cid",)
     coded = sim.pq_encode(assigned, codebooks, vec_col, id_col, extra_cols=extra)
     coded.write.mode("overwrite").partitionBy("cid").parquet(index_path)
     spark = corpus.sparkSession
-    _drop_stale_tombstones(spark, index_path)
-    local_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cid INT, cv ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(_centroid_sidecar(index_path))
+    _write_centroids(spark, index_path, centroids)
     local_df(
         spark,
         [
@@ -857,7 +755,6 @@ def extend_ivfpq_index(
     index_path: str,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
 ) -> None:
     """Incrementally index new vectors into a compressed IVF-PQ
     layout: assign against the SIDECAR centroids and PQ-encode with
@@ -879,7 +776,7 @@ def extend_ivfpq_index(
     _compact_if_readmitting(new_rows, index_path, id_col)
     _append(
         new_rows, index_path, load_ann_centroids(spark, index_path),
-        load_pq_codebooks(spark, index_path), vec_col, id_col, assign,
+        load_pq_codebooks(spark, index_path), vec_col, id_col,
     )
 
 
@@ -959,11 +856,4 @@ def query_ivfpq_index(
         "neighbor_id",
         F.round(sim.cosine(F.col("qv"), F.col("cv")), 4).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return sim._rank_topk(exact, k)

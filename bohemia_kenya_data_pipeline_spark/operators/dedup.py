@@ -1188,7 +1188,7 @@ def assign_semantic_cluster(
     """
     from .similarity import _sql_dbl, cosine, norm
 
-    # one SQL parse, not k×dim py4j F.lit calls (see _centroid_literal)
+    # one SQL parse, not k×dim py4j F.lit calls (see _centroid_literal_sql)
     cents = F.expr(
         "array("
         + ",".join(

@@ -176,6 +176,18 @@ def _drop_null_vecs(df: DataFrame, vec_col: str) -> DataFrame:
     return df.filter(F.col(vec_col).isNotNull())
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Top ``k`` (query_id, neighbor_id, score, rank) rows per query by
+    (score desc, neighbor_id asc) — the determinism contract every
+    top-k path shares: one window shuffle on query_id."""
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "score", "rank")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -210,12 +222,7 @@ def cosine_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -273,37 +280,29 @@ def _unit(v: list[float]) -> list[float]:
 def _sql_dbl(v: float) -> str:
     """Exact SQL double literal: ``repr`` round-trips the IEEE-754
     bits and the ``D`` suffix forces DoubleType — the building block
-    for one-parse literal arrays (see :func:`_centroid_literal`)."""
+    for one-parse literal arrays (see :func:`_centroid_literal_sql`)."""
     return repr(float(v)) + "D"
 
 
 def _centroid_literal_sql(centroids: list[list[float]]) -> str:
-    """The SQL text of :func:`_centroid_literal` — exposed so callers
-    that compose the literal into a LARGER one-parse expression
-    (:func:`_nearest_cid_sql`, :func:`_probe_cids_sql`) splice the
-    string instead of paying a py4j round trip per composition step."""
+    """SQL text of the centroids as an ``array<struct<cid, cv>>``
+    literal, each vector UNIT-NORMALIZED driver-side: argmax over
+    centroids of cosine(v, c) equals argmax of dot(v, c/|c|) (the row
+    vector's own norm is a constant positive factor), so assignment
+    and probing need one dot fold per centroid instead of a full
+    cosine.
+
+    Emitted as text so callers splice it into ONE larger ``F.expr``
+    parse (:func:`_nearest_cid_sql`, :func:`_probe_cids_sql`):
+    composing C×D literal Columns cost a py4j round trip per value —
+    0.32 s of pure driver time per build at 8×64 vs 0.002 s for the
+    parsed string (r14)."""
     return "array(" + ",".join(
         "named_struct('cid', {}, 'cv', array({}))".format(
             i, ",".join(_sql_dbl(v) for v in _unit(c))
         )
         for i, c in enumerate(centroids)
     ) + ")"
-
-
-def _centroid_literal(centroids: list[list[float]]) -> Column:
-    """Centroids as a literal, with each vector UNIT-NORMALIZED
-    driver-side: argmax over centroids of cosine(v, c) equals argmax
-    of dot(v, c/|c|) (the row vector's own norm is a constant positive
-    factor), so assignment/probing needs one dot fold per centroid
-    instead of a full cosine — higher-order folds are interpreted, so
-    this is a measured ~2x on the assignment pass.
-
-    Built as ONE ``F.expr`` SQL parse, not per-value ``F.lit`` calls:
-    composing C×D literal Columns costs a py4j round trip per value —
-    0.32 s of pure driver time per build at 8×64 vs 0.002 s for the
-    parsed string (r14; schema and values bit-identical, pinned by
-    ``tests/test_similarity.py``)."""
-    return F.expr(_centroid_literal_sql(centroids))
 
 
 def _dot_sql(a_sql: str, b_sql: str) -> str:
@@ -317,13 +316,13 @@ def _dot_sql(a_sql: str, b_sql: str) -> str:
 
 
 def _nearest_cid_sql(vec_sql: str, cents_sql: str) -> str:
-    """SQL text of :func:`_nearest_cid` over a spliced centroid
-    literal: parsing the whole argmax as ONE ``F.expr`` replaces the
-    per-call lambda-composition py4j traffic (r15 — the same §7.3
-    one-parse class as the literal itself; ivf_topk built this fold
-    once per Lloyd round plus once per side). The parsed tree is the
-    same aggregate/transform/CASE chain, so runtime values (and the
-    deliberately-interpreted fold execution) are unchanged."""
+    """SQL text of the argmax-similarity centroid id over a spliced
+    :func:`_centroid_literal_sql` (ties -> smaller cid, via the strict
+    ``>`` in the fold; a zero or all-negative vector still gets the
+    best-scoring cid). The per-centroid dot is staged via transform so
+    it evaluates once, then a struct fold picks the argmax; the whole
+    expression is ONE ``F.expr`` parse (r15 — lambda composition cost
+    py4j traffic per call), executed as an interpreted fold."""
     dot_s = _dot_sql(vec_sql, "c.cv")
     return (
         "aggregate("
@@ -348,36 +347,106 @@ def _probe_cids_sql(qv_sql: str, cents_sql: str, n_probe: int) -> str:
     )
 
 
-def _nearest_cid(vec: Column, cents: Column) -> Column:
-    """argmax-similarity centroid id (ties -> smaller cid,
-    deterministic). ``cents`` comes from :func:`_centroid_literal`
-    (unit-normalized); the per-centroid dot is staged via transform so
-    it evaluates once, then a cheap struct fold picks the argmax.
-    Column-composition twin of :func:`_nearest_cid_sql` (same tree,
-    value-parity pinned in tests) for callers holding arbitrary
-    ``Column`` inputs."""
-    sims = F.transform(
-        cents,
-        lambda c: F.struct(dot(vec, c["cv"]).alias("s"), c["cid"].alias("cid")),
+#: C×D (n_centroids × dim) at or above which centroid assignment and
+#: every Lloyd round run the Arrow kernel. Below it (e.g. the 8×64
+#: bench fixture = 512) the expression fold's per-row cost is a few
+#: hundred interpreted ops and JVM-side evaluation avoids the Arrow
+#: transfer; at production centroid counts (10²–10⁴ centroids) the
+#: fold is O(C×D) interpreted PER ROW on the one full-corpus pass a
+#: 100 TB deployment pays, while the numpy argmax stays one
+#: (B×D)@(D×C) BLAS call per batch (measured: 64×64 build 2.0×
+#: faster at sf0.1 and flat in C, see BENCH_scale_r08.json).
+ARROW_ASSIGN_MIN_CXD = 1024
+
+
+def _use_arrow(centroids: list[list[float]]) -> bool:
+    """The one size rule behind every IVF kernel choice: the Arrow
+    kernel at C×D ≥ ``ARROW_ASSIGN_MIN_CXD``, the expression fold
+    below it. D is read off the centroids themselves (trained from,
+    or seeded by, the data), so assignment and training always agree
+    on the kernel."""
+    return len(centroids) * len(centroids[0]) >= ARROW_ASSIGN_MIN_CXD
+
+
+def _assign_input(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
+    base = _drop_null_vecs(df, vec_col)
+    if out_col in base.columns:
+        raise ValueError(f"column name {out_col!r} already exists")
+    return base
+
+
+def assign_centroids(
+    df: DataFrame,
+    centroids: list[list[float]],
+    vec_col: str = "embedding",
+    out_col: str = "cid",
+) -> DataFrame:
+    """Nearest-centroid assignment: every non-NULL-vector row of ``df``
+    gains ``out_col`` = its argmax-cosine centroid id (ties → smaller
+    cid); all other columns pass through. The kernel follows the size
+    rule (:func:`_use_arrow`): :func:`assign_centroids_arrow` at
+    production C×D, else the JVM-side expression fold
+    (:func:`_assign_centroids_fold`). Both kernels give hash-identical
+    assignments (``tests/test_retrieval_index.py``). No shuffle —
+    assignment happens scan-side."""
+    kernel = assign_centroids_arrow if _use_arrow(centroids) else _assign_centroids_fold
+    return kernel(df, centroids, vec_col, out_col)
+
+
+def _assign_centroids_fold(
+    df: DataFrame, centroids: list[list[float]], vec_col: str, out_col: str
+) -> DataFrame:
+    """The expression-fold kernel of :func:`assign_centroids`: one SQL
+    parse for literal + cast + argmax (:func:`_nearest_cid_sql`)."""
+    vec_sql = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
+    return _assign_input(df, vec_col, out_col).withColumn(
+        out_col,
+        F.expr(_nearest_cid_sql(vec_sql, _centroid_literal_sql(centroids))),
     )
-    return F.aggregate(
-        sims,
-        F.struct(F.lit(float("-inf")).alias("best"), F.lit(-1).alias("cid")),
-        lambda acc, x: F.when(
-            x["s"] > acc["best"],
-            F.struct(x["s"].alias("best"), x["cid"].alias("cid")),
-        ).otherwise(acc),
-    )["cid"]
+
+
+def assign_centroids_arrow(
+    df: DataFrame,
+    centroids: list[list[float]],
+    vec_col: str = "embedding",
+    out_col: str = "cid",
+) -> DataFrame:
+    """The Arrow kernel of :func:`assign_centroids`: the same contract
+    (centroids unit-normalized driver-side so argmax dot == argmax
+    cosine; ties → smaller cid, which is numpy ``argmax``'s
+    first-occurrence rule just as it is the fold's strict-``>`` rule)
+    computed as one (B×D)@(D×C) numpy argmax per Arrow batch instead
+    of an interpreted O(C×D)-per-row expression fold. The index BUILD
+    is the one full-corpus pass a serving deployment pays, and at
+    production centroid counts (10²–10⁴) the fold's interpreted cost
+    dominates it. All non-vector columns pass through untouched."""
+    base = _assign_input(df, vec_col, out_col)
+    cents = np.asarray([_unit(c) for c in centroids], dtype=np.float64)
+    bc = base.sparkSession.sparkContext.broadcast(cents)
+
+    def assign(batches):
+        m = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            cm = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            pdf[out_col] = np.argmax(cm @ m.T, axis=1).astype(np.int32)
+            yield pdf
+
+    schema = ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}" for f in base.schema.fields
+    ) + f", `{out_col}` int"
+    return base.mapInPandas(assign, schema)
 
 
 def _seed_centroids(
     base: DataFrame, n_centroids: int, train_fraction: float | None
-) -> tuple[list[list[float]], int]:
-    """Deterministic k-means init shared by both training kernels: the
-    ``n_centroids`` vectors with the smallest md5(id) — order-stable
-    across partitioning, no RNG state. Returns (centroids,
-    effective_n_centroids); degrades to the corpus size on a tiny
-    full corpus, raises on a too-thin explicit sample."""
+) -> list[list[float]]:
+    """Deterministic k-means init: the ``n_centroids`` vectors with the
+    smallest md5(id) — order-stable across partitioning, no RNG state.
+    Degrades to the corpus size on a tiny full corpus (ivf_topk works
+    with any centroid count; exhaustive probing stays exact), raises on
+    a too-thin explicit sample."""
     seed_rows = (
         base.withColumn("_h", F.md5(F.col("id").cast("string")))
         .orderBy("_h")
@@ -386,19 +455,14 @@ def _seed_centroids(
     )
     if not seed_rows:
         raise ValueError("cannot train centroids on an empty corpus")
-    if len(seed_rows) < n_centroids:
-        if train_fraction is not None:
-            # the caller's sample is too thin — say so, and name the
-            # knob they actually used
-            raise ValueError(
-                f"training sample has only {len(seed_rows)} vectors for "
-                f"{n_centroids} centroids — raise train_fraction"
-            )
-        # tiny corpus, full-corpus training: degrade gracefully to as
-        # many centroids as there are vectors (ivf_topk works with any
-        # centroid count; exhaustive probing still exact)
-        n_centroids = len(seed_rows)
-    return [list(r.v) for r in seed_rows], n_centroids
+    if len(seed_rows) < n_centroids and train_fraction is not None:
+        # the caller's sample is too thin — say so, and name the knob
+        # they actually used
+        raise ValueError(
+            f"training sample has only {len(seed_rows)} vectors for "
+            f"{n_centroids} centroids — raise train_fraction"
+        )
+    return [list(r.v) for r in seed_rows]
 
 
 def ivf_train_centroids(
@@ -413,12 +477,12 @@ def ivf_train_centroids(
     """Deterministic spherical-k-means centroids for IVF bucketing.
 
     Init: the ``n_centroids`` corpus vectors with the smallest
-    md5(id) — order-stable across partitioning, no RNG state. Then
-    ``n_iters`` Lloyd rounds, each ONE shuffle: assign every vector to
-    its argmax-cosine centroid (map-side fold over the centroid
-    literal), then per-dimension ``avg`` groupBy. Per-round driver
-    traffic is k×dim doubles (centroid metadata, like a schema).
-    Empty clusters keep their previous centroid.
+    md5(id) (:func:`_seed_centroids`). Then ``n_iters`` Lloyd rounds,
+    the loop :func:`ivf_refine_centroids` runs: each round assigns
+    every vector to its argmax-cosine centroid and takes the
+    per-dimension mean (:func:`_lloyd_round`, kernel by C×D). Per-round
+    driver traffic is k×dim doubles (centroid metadata, like a
+    schema). Empty clusters keep their previous centroid.
 
     ``train_fraction`` is the 100 TB knob: centroid quality needs
     representativeness, not the full corpus, and full-corpus training
@@ -439,21 +503,59 @@ def ivf_train_centroids(
                 f"train_fraction must be in (0, 1], got {train_fraction}"
             )
         corpus = sample_by_hash(corpus, id_col, train_fraction, seed)
+    return _lloyd(
+        corpus, vec_col, id_col, n_iters,
+        lambda base: _seed_centroids(base, n_centroids, train_fraction),
+    )
+
+
+def ivf_refine_centroids(
+    corpus: DataFrame,
+    centroids: list[list[float]],
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    n_iters: int = 1,
+) -> list[list[float]]:
+    """Warm-start Lloyd: refine GIVEN centroids over a corpus for
+    ``n_iters`` rounds — the same loop :func:`ivf_train_centroids`
+    runs after seeding. Used by ``jobs.retrieval.retrain_index`` to
+    re-center a serving index's centroids on its LIVE stored vectors
+    after ``index_ingest_drift`` crosses the rebuild band, without
+    touching the source corpus."""
+    if not centroids:
+        raise ValueError("cannot refine an empty centroid list")
+    return _lloyd(corpus, vec_col, id_col, n_iters, lambda base: centroids)
+
+
+def _lloyd(corpus, vec_col, id_col, n_iters, init) -> list[list[float]]:
+    """The one Lloyd loop: project ``corpus`` to (id, v) once and
+    persist it (the seed pass and every round scan it), start from
+    ``init(base)``, run ``n_iters`` rounds."""
     base = _drop_null_vecs(corpus, vec_col).select(
         F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
     )
-    # the seed pass + every Lloyd round scans `base`: persist so the
-    # corpus projection is paid once, not n_iters+1 times
     base.persist()
     try:
-        centroids, n_centroids = _seed_centroids(
-            base, n_centroids, train_fraction
-        )
+        centroids = init(base)
         for _ in range(n_iters):
-            centroids = _lloyd_round_fold(base, centroids)
+            centroids = _lloyd_round(base, centroids)
     finally:
         base.unpersist()
-    return centroids
+    return [[float(x) for x in c] for c in centroids]
+
+
+def _lloyd_round(
+    base: DataFrame, centroids: list[list[float]]
+) -> list[list[float]]:
+    """One Lloyd round over (id, v) rows, kernel by the size rule
+    (:func:`_use_arrow`). Both kernels share the contract:
+    argmax-cosine assignment with ties to the smaller cid,
+    per-dimension mean, empty clusters keep their previous centroid.
+    Their centroids agree to ~1e-9 per component (float summation
+    order) and give identical downstream assignments."""
+    if _use_arrow(centroids):
+        return _lloyd_round_arrow(base, centroids)
+    return _lloyd_round_fold(base, centroids)
 
 
 def _lloyd_round_fold(
@@ -489,105 +591,6 @@ def _lloyd_round_fold(
     )
     new = {r["cid"]: list(r["mv"]) for r in means}
     return [new.get(i, centroids[i]) for i in range(len(centroids))]
-
-
-def ivf_refine_centroids(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_iters: int = 1,
-    kernel: str = "auto",
-) -> list[list[float]]:
-    """Warm-start Lloyd: refine GIVEN centroids over a corpus for
-    ``n_iters`` rounds — the retraining face of the two trainers
-    (which seed from md5-smallest ids and then run this same loop).
-    Used by ``jobs.retrieval.retrain_index`` to re-center a serving
-    index's centroids on its LIVE stored vectors after
-    ``index_ingest_drift`` crosses the rebuild band, without touching
-    the source corpus. ``kernel`` picks the round implementation the
-    way ``build_ann_index(assign=...)`` does: "fold" (JVM expression
-    fold — right below ``ARROW_ASSIGN_MIN_CXD``) or "arrow" (one
-    mapInPandas partial-sum pass per round); "auto" switches on C×D.
-    Both kernels share the contract: argmax-cosine assignment with
-    ties to the smaller cid, per-dimension mean, empty clusters keep
-    their previous centroid."""
-    if not centroids:
-        raise ValueError("cannot refine an empty centroid list")
-    if kernel == "auto":
-        cxd = len(centroids) * len(centroids[0])
-        kernel = "arrow" if cxd >= ARROW_ASSIGN_MIN_CXD else "fold"
-    if kernel not in ("fold", "arrow"):
-        raise ValueError(
-            f"kernel must be 'auto', 'fold' or 'arrow', got {kernel!r}"
-        )
-    rnd = _lloyd_round_arrow if kernel == "arrow" else _lloyd_round_fold
-    base = _drop_null_vecs(corpus, vec_col).select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-    )
-    base.persist()
-    try:
-        centroids = [[float(x) for x in c] for c in centroids]
-        for _ in range(n_iters):
-            centroids = rnd(base, centroids)
-    finally:
-        base.unpersist()
-    return [[float(x) for x in c] for c in centroids]
-
-
-def ivf_train_centroids_arrow(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_centroids: int = 8,
-    n_iters: int = 5,
-    train_fraction: float | None = None,
-    seed: int = 42,
-) -> list[list[float]]:
-    """Spherical-k-means training, Arrow-vectorized — the training
-    twin of :func:`assign_centroids_arrow` (r8): same deterministic
-    md5-seeding and empty-cluster handling as
-    :func:`ivf_train_centroids`, but each Lloyd round is ONE
-    ``mapInPandas`` pass emitting per-PARTITION partial sums
-    ``(cid, count, Σv)`` instead of a per-row interpreted argmax fold
-    plus a posexplode shuffle. At production centroid counts
-    (10²–10⁴) the fold's O(C×D)-per-row interpreted cost dominates
-    every round; here assignment is one (B×D)@(D×C) numpy argmax per
-    batch and the per-dimension means reduce driver-side over
-    ``partitions × occupied_cids`` partial rows — metadata-sized for
-    sampled training (``train_fraction``, the 100 TB knob, keeps the
-    sample's partition count small; coalesce the sample if you train
-    at extreme C on many partitions).
-
-    Semantics: identical Lloyd fixed point up to float summation
-    order (partials are combined in sorted (cid, partition) order, so
-    the result is DETERMINISTIC for a fixed input layout — the same
-    determinism class as the fold path, whose Spark ``avg`` also
-    fixes an order per layout; measured on the fixture the two
-    kernels' centroids agree to ~1e-9 per component and produce
-    identical downstream assignments — ``tests/test_similarity.py``).
-    """
-    if train_fraction is not None:
-        from .sampling import sample_by_hash
-
-        if not 0 < train_fraction <= 1:
-            raise ValueError(
-                f"train_fraction must be in (0, 1], got {train_fraction}"
-            )
-        corpus = sample_by_hash(corpus, id_col, train_fraction, seed)
-    base = _drop_null_vecs(corpus, vec_col).select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-    )
-    base.persist()
-    try:
-        centroids, n_centroids = _seed_centroids(
-            base, n_centroids, train_fraction
-        )
-        for _ in range(n_iters):
-            centroids = _lloyd_round_arrow(base, centroids)
-    finally:
-        base.unpersist()
-    return [[float(x) for x in c] for c in centroids]
 
 
 def _lloyd_round_arrow(
@@ -705,12 +708,7 @@ def ivf_topk(
         "score",
         F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 4),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def lsh_topk(
@@ -759,12 +757,7 @@ def lsh_topk(
         "score",
         F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 4),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def label_centroids(
@@ -1405,12 +1398,7 @@ def quantized_topk_prequantized(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _rank_topk(pairs, k)
 
 
 def rrf_fuse(
@@ -1457,61 +1445,125 @@ def rrf_fuse(
     return out.select(group_col, id_col, "rrf_nanos", "rank")
 
 
-#: C×D (n_centroids × dim) at or above which index build/extend
-#: assignment defaults to the Arrow kernel. Below it (e.g. the 8×64
-#: bench fixture = 512) the expression fold's per-row cost is a few
-#: hundred interpreted ops and JVM-side evaluation avoids the Arrow
-#: transfer; at production centroid counts (10²–10⁴ centroids) the
-#: fold is O(C×D) interpreted PER ROW on the one full-corpus pass a
-#: 100 TB deployment pays, while the numpy argmax stays one
-#: (B×D)@(D×C) BLAS call per batch (measured: 64×64 build 2.0×
-#: faster at sf0.1 and flat in C, see BENCH_scale_r08.json).
-ARROW_ASSIGN_MIN_CXD = 1024
-
-
-def assign_centroids_arrow(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    out_col: str = "cid",
+def _map_query_batch(
+    corpus: DataFrame,
+    queries: DataFrame,
+    vec_col: str,
+    id_col: str,
+    caller: str,
+    prepare,
+    per_batch,
 ) -> DataFrame:
-    """Nearest-centroid assignment, Arrow-vectorized: every (non-NULL
-    vector) input row gains ``out_col`` = its argmax-cosine centroid
-    id — EXACTLY :func:`_nearest_cid`'s contract (centroids
-    unit-normalized driver-side so argmax dot == argmax cosine; ties →
-    smaller cid, which is numpy ``argmax``'s first-occurrence rule just
-    as it is the fold's strict-``>`` rule; hash-identical parity
-    golden in ``tests/test_retrieval_index.py``) but computed as one
-    (B×D)@(D×C) numpy argmax per Arrow batch instead of an
-    interpreted O(C×D)-per-row expression fold.
+    """The collect-and-broadcast prologue and the corpus pass every
+    Arrow query kernel shares. The query batch is collected once
+    (:func:`_collect_queries`: NULL vectors dropped, guarded at 10k —
+    tiny BY CONTRACT, the production fixed-batch regime), its (Q, D)
+    matrix goes through ``prepare`` on the driver, and ``(qids,
+    prepare(qm))`` is broadcast to every task. The corpus (NULL
+    vectors dropped) then streams through ONE ``mapInPandas`` pass:
+    ``per_batch(qids, payload, ids, cm)`` turns each Arrow batch's ids
+    and (B, D) float64 vectors into ``(query_id, neighbor_id, score)``
+    rows. No shuffle."""
+    q_rows = _collect_queries(queries, vec_col, id_col, caller)
+    if not q_rows:
+        raise ValueError("empty query batch (no rows, or every query vector NULL)")
+    qids = np.asarray([r["qid"] for r in q_rows], dtype=np.int64)
+    bq = corpus.sparkSession.sparkContext.broadcast(
+        (qids, prepare(_query_matrix(q_rows)))
+    )
 
-    This is the build/extend-path twin of the r6 Arrow scoring work:
-    the index BUILD is the one full-corpus pass a serving deployment
-    pays, and at production centroid counts (10²–10⁴) the fold's
-    interpreted cost dominates it. All non-vector columns pass
-    through untouched (the kernel only reads ``vec_col``); no
-    shuffle — assignment happens scan-side, batch by batch.
-    """
-    base = _drop_null_vecs(df, vec_col)
-    if out_col in base.columns:
-        raise ValueError(f"column name {out_col!r} already exists")
-    cents = np.asarray([_unit(c) for c in centroids], dtype=np.float64)
-    bc = base.sparkSession.sparkContext.broadcast(cents)
-
-    def assign(batches):
-        m = bc.value
+    def run(batches):
+        b_qids, payload = bq.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            cm = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            pdf[out_col] = np.argmax(cm @ m.T, axis=1).astype(np.int32)
-            yield pdf
+            ids = pdf["__id"].to_numpy(dtype=np.int64)
+            cm = np.asarray(pdf["__v"].tolist(), dtype=np.float64)
+            yield per_batch(b_qids, payload, ids, cm)
 
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in base.schema.fields
-    ) + f", `{out_col}` int"
-    return base.mapInPandas(assign, schema)
+    return (
+        _drop_null_vecs(corpus, vec_col)
+        .select(F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v"))
+        .mapInPandas(run, "query_id bigint, neighbor_id bigint, score double")
+    )
+
+
+def _arrow_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    vec_col: str,
+    id_col: str,
+    batch_keep: int | None,
+    decimals: int,
+    caller: str,
+    prepare,
+    scorer,
+) -> DataFrame:
+    """The one body of the Arrow top-k kernels; only the scoring
+    differs. ``scorer(payload, cm)`` is called once per Arrow batch
+    and returns ``score(j, ok) -> (rows, s)``: the scores ``s`` of
+    batch rows ``rows`` for query ``j``, drawn from the rows where the
+    bool mask ``ok`` (self-match excluded) holds. Each batch keeps its
+    top ``batch_keep`` (default ``3k``) candidates per query; the
+    exact global top-k per query comes from one window over the
+    ~(batches × Q × 3k)-row candidate set, with scores rounded to
+    ``decimals`` and ties broken on neighbor id. ``batch_keep > k``
+    absorbs rounded-score ties at the raw-score cutoff (a row
+    infinitesimally below the kth raw score can still win after
+    rounding on the neighbor-id tie-break; a >2k-deep tie cluster
+    inside one batch is the only way to get this wrong, at vanishing
+    probability)."""
+    keep = 3 * k if batch_keep is None else batch_keep
+
+    def per_batch(qids, payload, ids, cm):
+        score = scorer(payload, cm)
+        out_q, out_n, out_s = [], [], []
+        for j, qid in enumerate(qids):
+            rows, s = score(j, ids != qid)
+            if len(rows) > keep:
+                sel = np.argpartition(-s, keep - 1)[:keep]
+                rows, s = rows[sel], s[sel]
+            out_q.append(np.full(len(rows), qid, dtype=np.int64))
+            out_n.append(ids[rows])
+            out_s.append(s)
+        return pd.DataFrame(
+            {
+                "query_id": np.concatenate(out_q),
+                "neighbor_id": np.concatenate(out_n),
+                "score": np.concatenate(out_s),
+            }
+        )
+
+    cand = _map_query_batch(
+        corpus, queries, vec_col, id_col, caller, prepare, per_batch
+    )
+    return _rank_topk(cand.withColumn("score", F.round("score", decimals)), k)
+
+
+def _safe_norms(m: np.ndarray) -> np.ndarray:
+    """Row norms with 0 replaced by 1, so a zero vector scores 0."""
+    n = np.linalg.norm(m, axis=1)
+    return np.where(n > 0, n, 1.0)
+
+
+def _cosine_prepare(qm: np.ndarray):
+    return qm, _safe_norms(qm)
+
+
+def _dense(s: np.ndarray):
+    """``score(j, ok)`` over a precomputed (B, Q) score matrix."""
+
+    def score(j, ok):
+        rows = np.flatnonzero(ok)
+        return rows, s[rows, j]
+
+    return score
+
+
+def _cosine_scorer(payload, cm):
+    qm, qn = payload
+    return _dense((cm @ qm.T) / _safe_norms(cm)[:, None] / qn[None, :])
 
 
 def cosine_topk_arrow(
@@ -1525,93 +1577,43 @@ def cosine_topk_arrow(
     """Exact brute-force cosine top-k, Arrow-vectorized: same contract
     as :func:`cosine_topk` (scores rounded to 4 dp, self-matches
     excluded, (score desc, neighbor_id) tie-break) but the scoring is
-    a numpy matmul inside ``mapInPandas`` instead of a per-pair
-    ``zip_with``/``aggregate`` fold.
+    one BLAS (B×dim)@(dim×Q) matmul per Arrow batch instead of a
+    per-pair ``zip_with``/``aggregate`` fold.
 
     Why it exists: the expression fold is a Catalyst higher-order
     function — interpreted per element, never codegen'd — and the 30x
     scale run (`BENCH_scale_r06.json`) showed it becoming GC-bound
-    (cosine_fixedq slope_tail 1.18). One BLAS (B×dim)@(dim×Q) per
-    Arrow batch does the same arithmetic at memory-bandwidth speed.
-    This is the narrow case where SCALING.md's "Python stays off the
-    hot path" inverts: the JVM-side formulation is the interpreted
-    one, and the Arrow batch transfer buys vectorized compute.
-
-    Plan: the query batch is collected driver-side (it is tiny BY
-    CONTRACT — the production fixed-batch regime; raises if > 10k) and
-    broadcast to every task; the corpus streams through ONE
-    mapInPandas pass emitting the per-batch top ``batch_keep``
-    (default ``3k``) candidates per query; the exact global top-k per
-    query comes from one window over the ~(batches × Q × 3k)-row
-    candidate set. ``batch_keep > k`` absorbs rounded-score ties at
-    the raw-score cutoff (a row infinitesimally below the kth raw
-    score can still win after 4-dp rounding on the neighbor-id
-    tie-break; a >2k-deep tie cluster inside one batch is the only
-    way to get this wrong, at vanishing probability).
+    (cosine_fixedq slope_tail 1.18). This is the narrow case where
+    SCALING.md's "Python stays off the hot path" inverts: the
+    JVM-side formulation is the interpreted one, and the Arrow batch
+    transfer buys vectorized compute. Plan: :func:`_arrow_topk`.
 
     Returns (query_id, neighbor_id, score, rank).
     """
-    if batch_keep is None:
-        batch_keep = 3 * k
-    q_rows = _collect_queries(queries, vec_col, id_col, "cosine_topk_arrow")
-    if not q_rows:
-        raise ValueError("empty query batch (no rows, or every query vector NULL)")
-    qids = np.asarray([r["qid"] for r in q_rows], dtype=np.int64)
-    qm = _query_matrix(q_rows)
-    qn = np.linalg.norm(qm, axis=1)
-    qn[qn == 0.0] = 1.0
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, qm, qn))
+    return _arrow_topk(
+        corpus, queries, k, vec_col, id_col, batch_keep, 4,
+        "cosine_topk_arrow", _cosine_prepare, _cosine_scorer,
+    )
 
-    def score_batches(batches):
-        b_qids, b_qm, b_qn = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["__id"].to_numpy(dtype=np.int64)
-            c = np.asarray(pdf["__v"].tolist(), dtype=np.float64)
-            cn = np.linalg.norm(c, axis=1)
-            cn[cn == 0.0] = 1.0
-            s = (c @ b_qm.T) / cn[:, None] / b_qn[None, :]
-            keep = min(batch_keep, len(ids))
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(b_qids)):
-                col = s[:, j]
-                mask = ids != b_qids[j]
-                cand_idx = np.flatnonzero(mask)
-                if len(cand_idx) > keep:
-                    part = cand_idx[
-                        np.argpartition(-col[cand_idx], keep - 1)[:keep]
-                    ]
-                else:
-                    part = cand_idx
-                out_q.append(np.full(len(part), b_qids[j], dtype=np.int64))
-                out_n.append(ids[part])
-                out_s.append(col[part])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "score": np.concatenate(out_s),
-                }
-            )
 
-    cand = (
-        corpus.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v"))
-        .mapInPandas(
-            score_batches, "query_id bigint, neighbor_id bigint, score double"
-        )
-    )
-    rounded = cand.withColumn("score", F.round(F.col("score"), 4))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        rounded.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+def _quantize(m: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Int8 codes and the norms of the codes (0 for a zero vector):
+    scale = max|v|/127, q = floor(v/scale + 0.5)."""
+    scales = np.abs(m).max(axis=1) / 127.0
+    safe = np.where(scales > 0, scales, 1.0)
+    q = np.floor(m / safe[:, None] + 0.5).astype(np.int64)
+    q[scales == 0] = 0
+    return q, np.sqrt((q * q).sum(axis=1).astype(np.float64))
+
+
+def _quantized_scorer(payload, cm):
+    qq, qn = payload
+    cq, cn = _quantize(cm)
+    s = (cq @ qq.T) / np.where(cn > 0, cn, 1.0)[:, None]
+    s /= np.where(qn > 0, qn, 1.0)[None, :]
+    s[cn == 0, :] = 0.0
+    s[:, qn == 0] = 0.0
+    return _dense(s)
 
 
 def quantized_topk_arrow(
@@ -1633,82 +1635,28 @@ def quantized_topk_arrow(
     pair math is integer dot products (no accumulation-order hazard),
     and the final division/sqrt are single IEEE operations identical
     on every engine — asserted against the expression-fold path in
-    tests/test_similarity.py. Plan: query batch quantized driver-side
-    and broadcast; ONE mapInPandas corpus pass quantizes and scores
-    each Arrow batch as an int64 matmul, emitting the per-batch top
-    ``batch_keep`` (default 3k) per query; exact global top-k from one
-    window over the reduced candidate set.
+    tests/test_similarity.py. The query batch is quantized on the
+    driver; each corpus batch is quantized and scored as one int64
+    matmul (:func:`_arrow_topk`).
     """
-    if batch_keep is None:
-        batch_keep = 3 * k
-
-    def _quant(m: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        scales = np.abs(m).max(axis=1) / 127.0
-        safe = np.where(scales > 0, scales, 1.0)
-        q = np.floor(m / safe[:, None] + 0.5).astype(np.int64)
-        q[scales == 0] = 0
-        return q, scales
-
-    q_rows = _collect_queries(queries, vec_col, id_col, "quantized_topk_arrow")
-    if not q_rows:
-        raise ValueError("empty query batch (no rows, or every query vector NULL)")
-    qids = np.asarray([r["qid"] for r in q_rows], dtype=np.int64)
-    qq, _ = _quant(_query_matrix(q_rows))
-    qn = np.sqrt((qq * qq).sum(axis=1).astype(np.float64))
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, qq, qn))
-
-    def score_batches(batches):
-        b_qids, b_qq, b_qn = bq.value
-        qn_safe = np.where(b_qn > 0, b_qn, 1.0)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["__id"].to_numpy(dtype=np.int64)
-            cm = np.asarray(pdf["__v"].tolist(), dtype=np.float64)
-            cq, _ = _quant(cm)
-            cn = np.sqrt((cq * cq).sum(axis=1).astype(np.float64))
-            cn_safe = np.where(cn > 0, cn, 1.0)
-            dd = cq @ b_qq.T
-            s = dd / cn_safe[:, None] / qn_safe[None, :]
-            s[cn == 0, :] = 0.0
-            s[:, b_qn == 0] = 0.0
-            keep = min(batch_keep, len(ids))
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(b_qids)):
-                col = s[:, j]
-                cand_idx = np.flatnonzero(ids != b_qids[j])
-                if len(cand_idx) > keep:
-                    cand_idx = cand_idx[
-                        np.argpartition(-col[cand_idx], keep - 1)[:keep]
-                    ]
-                out_q.append(np.full(len(cand_idx), b_qids[j], dtype=np.int64))
-                out_n.append(ids[cand_idx])
-                out_s.append(col[cand_idx])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "score": np.concatenate(out_s),
-                }
-            )
-
-    cand = (
-        corpus.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v"))
-        .mapInPandas(
-            score_batches, "query_id bigint, neighbor_id bigint, score double"
-        )
+    return _arrow_topk(
+        corpus, queries, k, vec_col, id_col, batch_keep, 6,
+        "quantized_topk_arrow", _quantize, _quantized_scorer,
     )
-    rounded = cand.withColumn("score", F.round(F.col("score"), 6))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        rounded.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+
+
+def _ivf_scorer(payload, cm):
+    qm, qn, probes, cents = payload
+    cn = _safe_norms(cm)
+    # assignment: argmax dot (first max -> smaller cid, same tie rule
+    # as the strict-> fold)
+    cid = np.argmax(cm @ cents.T, axis=1)
+
+    def score(j, ok):
+        rows = np.flatnonzero(ok & np.isin(cid, probes[j]))
+        return rows, (cm[rows] @ qm[j]) / cn[rows] / qn[j]
+
+    return score
 
 
 def ivf_topk_arrow(
@@ -1730,81 +1678,22 @@ def ivf_topk_arrow(
     and the scoring as numpy matmuls in ONE mapInPandas corpus pass.
 
     The fold-based :func:`ivf_topk` spends most of its time in the
-    interpreted `_nearest_cid` fold (8 centroids x 64 dims per row);
+    interpreted nearest-cid fold (8 centroids x 64 dims per row);
     here each Arrow batch assigns via one (B x dim)@(dim x k_c) argmax
     and scores ONLY the probe-matched (query, row) pairs, so total
     scoring flops stay at the IVF candidate volume
-    (~n_probe/n_centroids of brute force). Query batch is collected +
-    broadcast BY CONTRACT (fixed production batch, guarded at 10k).
-    Per-batch top ``batch_keep`` (default 3k) absorbs rounded-score
-    ties at the raw cutoff, exactly as in :func:`cosine_topk_arrow`.
+    (~n_probe/n_centroids of brute force). Plan: :func:`_arrow_topk`;
+    the probe lists are computed on the driver (:func:`_probe_cids`).
     """
-    if batch_keep is None:
-        batch_keep = 3 * k
     cents = np.asarray([_unit(c) for c in centroids], dtype=np.float64)
-    q_rows = _collect_queries(queries, vec_col, id_col, "ivf_topk_arrow")
-    if not q_rows:
-        raise ValueError("empty query batch (no rows, or every query vector NULL)")
-    qids = np.asarray([r["qid"] for r in q_rows], dtype=np.int64)
-    qm = _query_matrix(q_rows)
-    qn = np.linalg.norm(qm, axis=1)
-    qn_safe = np.where(qn > 0, qn, 1.0)
-    # per-query probe list: dot desc, cid asc, the fold path's order
-    probes = _probe_cids(qm, centroids, n_probe)
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, qm, qn_safe, probes, cents))
 
-    def score_batches(batches):
-        b_qids, b_qm, b_qn, b_probes, b_cents = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["__id"].to_numpy(dtype=np.int64)
-            cm = np.asarray(pdf["__v"].tolist(), dtype=np.float64)
-            cn = np.linalg.norm(cm, axis=1)
-            cn_safe = np.where(cn > 0, cn, 1.0)
-            # assignment: argmax dot (first max -> smaller cid, same
-            # tie rule as the strict-> fold)
-            cid = np.argmax(cm @ b_cents.T, axis=1)
-            out_q, out_n, out_s = [], [], []
-            keep = batch_keep
-            for j in range(len(b_qids)):
-                mask = np.isin(cid, b_probes[j]) & (ids != b_qids[j])
-                cand = np.flatnonzero(mask)
-                if not len(cand):
-                    continue
-                s = (cm[cand] @ b_qm[j]) / cn_safe[cand] / b_qn[j]
-                if len(cand) > keep:
-                    sel = np.argpartition(-s, keep - 1)[:keep]
-                    cand, s = cand[sel], s[sel]
-                out_q.append(np.full(len(cand), b_qids[j], dtype=np.int64))
-                out_n.append(ids[cand])
-                out_s.append(s)
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "score": np.concatenate(out_s),
-                }
-            )
+    def prepare(qm):
+        # per-query probe list: dot desc, cid asc, the fold path's order
+        return qm, _safe_norms(qm), _probe_cids(qm, centroids, n_probe), cents
 
-    cand = (
-        corpus.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v"))
-        .mapInPandas(
-            score_batches, "query_id bigint, neighbor_id bigint, score double"
-        )
-    )
-    rounded = cand.withColumn("score", F.round(F.col("score"), 4))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        rounded.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+    return _arrow_topk(
+        corpus, queries, k, vec_col, id_col, batch_keep, 4,
+        "ivf_topk_arrow", prepare, _ivf_scorer,
     )
 
 
@@ -1818,9 +1707,10 @@ def cosine_threshold_pairs_arrow(
     """All (query, corpus) pairs with cosine similarity ≥ ``threshold``
     — the threshold-join sibling of :func:`cosine_topk_arrow` (same
     collected-and-broadcast query batch ≤ 10k, same one-pass
-    mapInPandas matmul, ZERO shuffle), for workloads that want every
-    match above a floor rather than a fixed k: decontamination against
-    a benchmark suite, blocklist screening, semantic recall sweeps.
+    mapInPandas matmul, :func:`_map_query_batch`; ZERO shuffle), for
+    workloads that want every match above a floor rather than a fixed
+    k: decontamination against a benchmark suite, blocklist screening,
+    semantic recall sweeps.
 
     Scores are rounded to 6 dp BEFORE the comparison so the membership
     predicate is reproducible across engines (the DuckDB oracle
@@ -1832,40 +1722,22 @@ def cosine_threshold_pairs_arrow(
 
     Returns (query_id, neighbor_id, score).
     """
-    q_rows = _collect_queries(queries, vec_col, id_col, "cosine_threshold_pairs_arrow")
-    if not q_rows:
-        raise ValueError("empty query batch (no rows, or every query vector NULL)")
-    qids = np.asarray([r["qid"] for r in q_rows], dtype=np.int64)
-    qm = _query_matrix(q_rows)
-    qn = np.linalg.norm(qm, axis=1)
-    bq = corpus.sparkSession.sparkContext.broadcast((qids, qm, qn))
     thr = float(threshold)
 
-    def score_batches(batches):
-        b_qids, b_qm, b_qn = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["__id"].to_numpy(dtype=np.int64)
-            c = np.asarray(pdf["__v"].tolist(), dtype=np.float64)
-            cn = np.linalg.norm(c, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = np.round((c @ b_qm.T) / cn[:, None] / b_qn[None, :], 6)
-            ci, qi = np.nonzero(s >= thr)  # NaN compares False: zero vecs out
-            yield pd.DataFrame(
-                {
-                    "query_id": b_qids[qi],
-                    "neighbor_id": ids[ci],
-                    "score": s[ci, qi],
-                }
+    def per_batch(qids, payload, ids, cm):
+        qm, qn = payload
+        with np.errstate(divide="ignore", invalid="ignore"):
+            s = np.round(
+                (cm @ qm.T) / np.linalg.norm(cm, axis=1)[:, None] / qn[None, :], 6
             )
-
-    return (
-        _drop_null_vecs(corpus, vec_col)
-        .select(F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v"))
-        .mapInPandas(
-            score_batches, "query_id bigint, neighbor_id bigint, score double"
+        ci, qi = np.nonzero(s >= thr)  # NaN compares False: zero vecs out
+        return pd.DataFrame(
+            {"query_id": qids[qi], "neighbor_id": ids[ci], "score": s[ci, qi]}
         )
+
+    return _map_query_batch(
+        corpus, queries, vec_col, id_col, "cosine_threshold_pairs_arrow",
+        lambda qm: (qm, np.linalg.norm(qm, axis=1)), per_batch,
     )
 
 
@@ -1958,18 +1830,11 @@ def mine_hard_negatives(
         F.col(positive_col).alias("neighbor_id"),
     )
     neg = cand.join(F.broadcast(pos), ["query_id", "neighbor_id"], "left_anti")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    out = (
-        neg.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_neg)
-        .select(
-            F.col("query_id").alias(anchor_col),
-            F.col("neighbor_id").alias("negative_id"),
-            "score",
-            "rank",
-        )
+    out = _rank_topk(neg, n_neg).select(
+        F.col("query_id").alias(anchor_col),
+        F.col("neighbor_id").alias("negative_id"),
+        "score",
+        "rank",
     )
     if flag_shortfall:
         wc = Window.partitionBy(anchor_col)

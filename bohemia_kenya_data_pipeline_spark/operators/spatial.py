@@ -65,7 +65,7 @@ def polygon_literal(polygons: Sequence[tuple[int, Sequence[tuple[float, float]]]
     from .similarity import _sql_dbl
 
     # one SQL parse for the whole polygon set, not a py4j call per
-    # coordinate (see similarity._centroid_literal — same r14 fix)
+    # coordinate (see similarity._centroid_literal_sql — same r14 fix)
     entries = []
     for pid, verts in polygons:
         lons = [float(lon) for lon, _ in verts]

@@ -12256,7 +12256,7 @@ def ivf_ann_fixedq_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow-vectorized IVF (assignment argmax + probe-masked scoring
     # as numpy matmuls in one corpus pass) against the SAME mirrored
     # oracle as ivf_ann_fixedq — the fix for the interpreted
-    # _nearest_cid fold that dominated the fold path at scale.
+    # _nearest_cid_sql fold that dominated the fold path at scale.
     emb = _t(spark, sf_dir, "embeddings")
     return sim.ivf_topk_arrow(
         emb,

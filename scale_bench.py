@@ -673,75 +673,53 @@ def main() -> None:
     # count — one full corpus pass of centroid assignment + the
     # partitioned write. Centroids are trained ONCE on the 1x corpus
     # and reused at both scales, so the slope isolates the
-    # assignment+write pass (the thing a 100 TB deployment pays).
-    # Both kernels measured: the fold is O(C x D) interpreted per row
-    # (the r6 island class), the Arrow kernel one BLAS argmax per
-    # batch — the 1x ratio IS the kernel speedup at C=64.
+    # assignment+write pass (the thing a 100 TB deployment pays). The
+    # kernel is the size rule's (similarity.ARROW_ASSIGN_MIN_CXD): at
+    # the default C=64, C x D = 4096 runs the Arrow argmax kernel.
     from bohemia_kenya_data_pipeline_spark.jobs import retrieval as rt
 
     ANN_C = int(os.environ.get("SCALE_ANN_CENTROIDS", "64"))
-    build_names = [f"ann_index_build_c{ANN_C}_arrow", f"ann_index_build_c{ANN_C}_fold"]
-    if not only or any(n in keep for n in build_names):
+    build_name = f"ann_index_build_c{ANN_C}_arrow"
+    if not only or build_name in keep:
         cents_big = sim.ivf_train_centroids(
             _t(spark, SRC, "embeddings"), n_centroids=ANN_C, n_iters=3
         )
-        for kernel in ("arrow", "fold"):
-            name = f"ann_index_build_c{ANN_C}_{kernel}"
-            if only and name not in keep:
-                continue
 
-            def mk(d, kr=kernel):
-                rt.build_ann_index(
-                    _t(spark, d, "embeddings"),
-                    os.path.join(SCRATCH, f"annbuild_{kr}"),
-                    centroids=cents_big,
-                    assign=kr,
-                )
-
-            measure(name, big, mk)
-            results[name]["note"] = (
-                f"index build, n_centroids={ANN_C} (C x D = {ANN_C * 64}): "
-                "assignment + partitioned write over the full corpus with "
-                "FIXED pre-trained centroids; "
-                + (
-                    "numpy argmax per Arrow batch — the production kernel"
-                    if kernel == "arrow"
-                    else "interpreted O(C x D)-per-row expression fold — "
-                    "oracle-baseline kernel, compare t_1x vs the arrow row"
-                )
+        def mk(d):
+            rt.build_ann_index(
+                _t(spark, d, "embeddings"),
+                os.path.join(SCRATCH, "annbuild_arrow"),
+                centroids=cents_big,
             )
 
-    # r8 follow-on: TRAINING at production C — each Lloyd round is the
-    # same interpreted-assignment story as the build pass, plus a
-    # posexplode shuffle; the Arrow trainer replaces a round with one
-    # mapInPandas partial-sum pass. 2 rounds at C=64, full corpus
-    # (train_fraction is the independent sampling knob).
-    train_names = [f"ivf_train_c{ANN_C}_arrow", f"ivf_train_c{ANN_C}_fold"]
-    if not only or any(n in keep for n in train_names):
-        for kernel in ("arrow", "fold"):
-            name = f"ivf_train_c{ANN_C}_{kernel}"
-            if only and name not in keep:
-                continue
-            trainer = (
-                sim.ivf_train_centroids_arrow
-                if kernel == "arrow"
-                else sim.ivf_train_centroids
+        measure(build_name, big, mk)
+        results[build_name]["note"] = (
+            f"index build, n_centroids={ANN_C} (C x D = {ANN_C * 64}): "
+            "assignment + partitioned write over the full corpus with "
+            "FIXED pre-trained centroids; numpy argmax per Arrow batch "
+            "at C x D >= 1024 — the production kernel"
+        )
+
+    # r8 follow-on: TRAINING at production C — each Lloyd round is one
+    # mapInPandas partial-sum pass at C x D >= 1024 (the size rule),
+    # instead of the interpreted assignment fold + posexplode shuffle.
+    # 2 rounds at C=64, full corpus (train_fraction is the independent
+    # sampling knob).
+    train_name = f"ivf_train_c{ANN_C}_arrow"
+    if not only or train_name in keep:
+
+        def mk_t(d):
+            sim.ivf_train_centroids(
+                _t(spark, d, "embeddings"), n_centroids=ANN_C, n_iters=2
             )
 
-            def mk_t(d, tr=trainer):
-                tr(_t(spark, d, "embeddings"), n_centroids=ANN_C, n_iters=2)
-
-            measure(name, big, mk_t)
-            results[name]["note"] = (
-                f"2 Lloyd rounds at n_centroids={ANN_C}, full corpus; "
-                + (
-                    "one mapInPandas partial-sum pass per round (partials = "
-                    "partitions x occupied cids) — the production trainer"
-                    if kernel == "arrow"
-                    else "interpreted per-row argmax fold + posexplode mean "
-                    "shuffle per round — oracle-baseline trainer"
-                )
-            )
+        measure(train_name, big, mk_t)
+        results[train_name]["note"] = (
+            f"2 Lloyd rounds at n_centroids={ANN_C}, full corpus; one "
+            "mapInPandas partial-sum pass per round (partials = "
+            "partitions x occupied cids) at C x D >= 1024 — the "
+            "production trainer"
+        )
 
     # r10: the maintenance-loop ACTION — warm-start Lloyd retrain over
     # the live index (tombstoned 10%) + re-assign + in-place rewrite.
@@ -759,7 +737,7 @@ def main() -> None:
             p = os.path.join(SCRATCH, f"annretrain_x{fct}")
             shutil.rmtree(p, ignore_errors=True)
             emb_f = _t(spark, dirs[fct], "embeddings")
-            rt.build_ann_index(emb_f, p, centroids=cents_r, assign="arrow")
+            rt.build_ann_index(emb_f, p, centroids=cents_r)
             rt.delete_from_index(
                 emb_f.filter(F.col("vec_id") % 10 == 7), p
             )
@@ -767,7 +745,7 @@ def main() -> None:
 
         def mk_r(d):
             fct = 1 if d == dirs[1] else big
-            rt.retrain_index(spark, rpaths[fct], n_iters=1, kernel="arrow")
+            rt.retrain_index(spark, rpaths[fct], n_iters=1)
 
         measure(retrain_name, big, mk_r)
         results[retrain_name]["note"] = (
@@ -826,12 +804,8 @@ def main() -> None:
                 spark, ps["manifest"], ["l_shipdate", "l_quantity"]
             )
             emb_f = _t(spark, dirs[fct], "embeddings")
-            rt.build_ann_index(
-                emb_f, ps["ann"], centroids=cents_i, assign="arrow"
-            )
-            rt.build_ivfpq_index(
-                emb_f, ps["pq"], centroids=cents_i, assign="arrow"
-            )
+            rt.build_ann_index(emb_f, ps["ann"], centroids=cents_i)
+            rt.build_ivfpq_index(emb_f, ps["pq"], centroids=cents_i)
             dd.minhash_index_write(
                 _t(spark, dirs[fct], "documents"), ps["minhash"]
             )

@@ -52,11 +52,11 @@ ALLOWED = {
         "variants own the many-polygon regime",
     ),
     "operators/similarity.py": (
-        6,
-        "dot/norm/_nearest_cid/L2/int-dot folds: the expression-fold "
+        5,
+        "dot/norm/L2/int-dot/nearest-centroid folds: the expression-fold "
         "scoring plans deliberately KEPT as oracle baselines (labeled "
-        "in bench.py); production paths are the Arrow twins and "
-        "assign='arrow'",
+        "in bench.py); production paths are the Arrow twins, and IVF "
+        "assignment/training switch to the Arrow kernel by C x D",
     ),
 }
 

@@ -80,20 +80,28 @@ def test_extend_ann_index_equals_rebuild(spark, tmp_path):
     assert spark.read.parquet(path).count() == 400
 
 
+def _fold_index(corpus, path, cents, mode="overwrite"):
+    """Write (vec_id, embedding, cid) with the expression-fold
+    assignment kernel, laid out like a build_ann_index index."""
+    sim._assign_centroids_fold(
+        corpus.select("vec_id", "embedding"), cents, "embedding", "cid"
+    ).write.mode(mode).partitionBy("cid").parquet(path)
+
+
 def test_arrow_assignment_parity_with_fold(spark, tmp_path):
-    """assign='arrow' (numpy argmax) writes a hash-identical index to
-    assign='fold' (_nearest_cid expression fold) — same rows, same
-    cids, same partition layout — at a C x D where 'auto' picks arrow
-    (VERDICT r7 ask 1)."""
+    """The Arrow assignment kernel (numpy argmax) writes a
+    hash-identical index to the expression-fold kernel — same rows,
+    same cids, same partition layout — at a C x D where the size rule
+    picks Arrow (VERDICT r7 ask 1)."""
     corpus = _toy_corpus(spark, n=600, dim=16)
     cents = sim.ivf_train_centroids(
         corpus, n_centroids=64, n_iters=2
     )
-    assert len(cents) * len(cents[0]) >= sim.ARROW_ASSIGN_MIN_CXD
+    assert sim._use_arrow(cents)
     p_fold = str(tmp_path / "fold")
     p_arrow = str(tmp_path / "arrow")
-    rt.build_ann_index(corpus, p_fold, centroids=cents, assign="fold")
-    rt.build_ann_index(corpus, p_arrow, centroids=cents, assign="arrow")
+    _fold_index(corpus, p_fold, cents)
+    rt.build_ann_index(corpus, p_arrow, centroids=cents)
 
     def snap(path):
         rows = spark.read.parquet(path).collect()
@@ -109,28 +117,25 @@ def test_arrow_assignment_parity_with_fold(spark, tmp_path):
 
 
 def test_assign_auto_threshold_and_extend_parity(spark, tmp_path):
-    """auto = fold below ARROW_ASSIGN_MIN_CXD, arrow at/above; extend
-    with the arrow kernel appends the same rows the fold kernel
+    """The size rule: fold below ARROW_ASSIGN_MIN_CXD, arrow at/above;
+    extend with the arrow kernel appends the same rows the fold kernel
     would."""
-    import pytest
-
     corpus = _toy_corpus(spark, n=200, dim=16)
     small = [[1.0] + [0.0] * 15, [0.0] * 15 + [1.0]]  # 2x16 = 32 < 1024
+    assert not sim._use_arrow(small)
     path = str(tmp_path / "auto_small")
     rt.build_ann_index(corpus, path, centroids=small)  # must not need Arrow
     assert len(rt.load_ann_centroids(spark, path)) == 2
 
-    with pytest.raises(ValueError, match="assign must be"):
-        rt.build_ann_index(corpus, path, centroids=small, assign="nope")
-
     # extend: arrow vs fold parity on the appended delta
     cents = sim.ivf_train_centroids(corpus, n_centroids=64, n_iters=2)
+    assert sim._use_arrow(cents)
     delta = _toy_corpus(spark, n=700, dim=16).filter(F.col("vec_id") > 600)
     p1, p2 = str(tmp_path / "e_fold"), str(tmp_path / "e_arrow")
-    rt.build_ann_index(corpus, p1, centroids=cents, assign="fold")
-    rt.build_ann_index(corpus, p2, centroids=cents, assign="fold")
-    rt.extend_ann_index(delta, p1, assign="fold")
-    rt.extend_ann_index(delta, p2, assign="arrow")
+    _fold_index(corpus, p1, cents)
+    _fold_index(delta, p1, cents, mode="append")
+    rt.build_ann_index(corpus, p2, centroids=cents)
+    rt.extend_ann_index(delta, p2)
     s1 = sorted((r.vec_id, int(r.cid)) for r in spark.read.parquet(p1).collect())
     s2 = sorted((r.vec_id, int(r.cid)) for r in spark.read.parquet(p2).collect())
     assert s1 == s2 and len(s1) == 300  # 200 corpus + 100 appended
@@ -138,7 +143,7 @@ def test_assign_auto_threshold_and_extend_parity(spark, tmp_path):
 
 def test_assign_centroids_arrow_passthrough_and_guards(spark):
     """The kernel passes non-vector columns through untouched, drops
-    NULL vectors, and refuses an out_col collision."""
+    NULL vectors, and refuses an out_col collision (both kernels)."""
     import pytest
 
     df = spark.createDataFrame(
@@ -150,28 +155,39 @@ def test_assign_centroids_arrow_passthrough_and_guards(spark):
     assert [(r.vec_id, r.cid, r.tag) for r in out] == [(1, 0, "a"), (2, 1, "b")]
     with pytest.raises(ValueError, match="already exists"):
         sim.assign_centroids_arrow(df.withColumn("cid", F.lit(1)), cents)
+    with pytest.raises(ValueError, match="already exists"):
+        sim.assign_centroids(df.withColumn("cid", F.lit(1)), cents)
+
+
+def _lloyd_with(round_fn, corpus, n_centroids, n_iters, seed=None):
+    """Seed (md5-smallest ids, or ``seed``) and run ``n_iters`` rounds
+    of one Lloyd kernel directly."""
+    base = corpus.select(
+        F.col("vec_id").alias("id"), sim._as_double("embedding").alias("v")
+    )
+    cents = seed or sim._seed_centroids(base, n_centroids, None)
+    for _ in range(n_iters):
+        cents = round_fn(base, cents)
+    return cents
 
 
 def test_build_train_kernel_auto_and_parity(spark, tmp_path):
-    """build_ann_index's implicit training picks the Arrow trainer at
-    production C (auto) and both trainers yield the same index content
-    on the fixture (identical Lloyd fixed point -> identical
-    assignments)."""
-    import pytest
-
+    """Both Lloyd kernels yield the same index content on the fixture
+    (identical Lloyd fixed point -> identical assignments), and
+    build_ann_index's implicit training at production C (the Arrow
+    round) indexes correctly end to end."""
     corpus = _toy_corpus(spark, n=300, dim=16)
     p1, p2 = str(tmp_path / "tf"), str(tmp_path / "ta")
-    c_fold = rt.build_ann_index(corpus, p1, n_centroids=4, n_iters=2, train="fold")
-    c_arrow = rt.build_ann_index(corpus, p2, n_centroids=4, n_iters=2, train="arrow")
+    c_fold = _lloyd_with(sim._lloyd_round_fold, corpus, 4, 2)
+    c_arrow = _lloyd_with(sim._lloyd_round_arrow, corpus, 4, 2)
+    rt.build_ann_index(corpus, p1, centroids=c_fold)
+    rt.build_ann_index(corpus, p2, centroids=c_arrow)
     assert len(c_fold) == len(c_arrow) == 4
     s1 = sorted((r.vec_id, int(r.cid)) for r in spark.read.parquet(p1).collect())
     s2 = sorted((r.vec_id, int(r.cid)) for r in spark.read.parquet(p2).collect())
     assert s1 == s2 and len(s1) == 300
 
-    with pytest.raises(ValueError, match="train must be"):
-        rt.build_ann_index(corpus, p1, n_centroids=4, train="nope")
-
-    # auto at C=64 trains via Arrow end-to-end and the index queries
+    # C=64 trains via Arrow end-to-end and the index queries
     p3 = str(tmp_path / "auto64")
     cents = rt.build_ann_index(corpus, p3, n_centroids=64, n_iters=1)
     assert len(cents) == 64
@@ -179,6 +195,66 @@ def test_build_train_kernel_auto_and_parity(spark, tmp_path):
     out = rt.query_ann_index(spark, p3, q, k=3, n_probe=64)
     want = sim.cosine_topk(corpus, q, k=3)
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_build_small_cxd_trains_with_fold_round(spark, tmp_path, monkeypatch):
+    """C x D is read off the data: 64 centroids over a dim-8 corpus is
+    512 < ARROW_ASSIGN_MIN_CXD, so the build trains AND assigns with
+    the fold kernels — never the Arrow round."""
+
+    def no_arrow(*a, **k):
+        raise AssertionError("Arrow kernel called below the size threshold")
+
+    monkeypatch.setattr(sim, "_lloyd_round_arrow", no_arrow)
+    monkeypatch.setattr(sim, "assign_centroids_arrow", no_arrow)
+    corpus = _toy_corpus(spark, n=400, dim=8)
+    cents = rt.build_ann_index(
+        corpus, str(tmp_path / "c64d8"), n_centroids=64, n_iters=1
+    )
+    assert len(cents) == 64 and len(cents[0]) == 8
+
+
+def test_every_ivf_entry_point_follows_one_size_rule(spark, tmp_path, monkeypatch):
+    """At C x D = 1023 every kernel choice is the fold, at 1024 the
+    Arrow kernel: build (training + assignment), extend, retrain,
+    ingest drift and direct training all agree."""
+    calls: list[str] = []
+
+    def spy(kind, fn):
+        def wrapped(*a, **k):
+            calls.append(kind)
+            return fn(*a, **k)
+
+        return wrapped
+
+    for name, kind in [
+        ("assign_centroids_arrow", "arrow"),
+        ("_lloyd_round_arrow", "arrow"),
+        ("_assign_centroids_fold", "fold"),
+        ("_lloyd_round_fold", "fold"),
+    ]:
+        monkeypatch.setattr(sim, name, spy(kind, getattr(sim, name)))
+
+    for n_cents, dim, want in [(31, 33, "fold"), (32, 32, "arrow")]:
+        assert n_cents * dim == sim.ARROW_ASSIGN_MIN_CXD - (want == "fold")
+        corpus = _toy_corpus(spark, n=200, dim=dim)
+        delta = _toy_corpus(spark, n=240, dim=dim).filter(F.col("vec_id") > 200)
+        path = str(tmp_path / f"rule_{want}")
+        steps = {
+            "build": lambda: rt.build_ann_index(
+                corpus, path, n_centroids=n_cents, n_iters=1
+            ),
+            "extend": lambda: rt.extend_ann_index(delta, path),
+            "drift": lambda: rt.index_ingest_drift(spark, path, delta).collect(),
+            "retrain": lambda: rt.retrain_index(spark, path, n_iters=1),
+            "train": lambda: sim.ivf_train_centroids(
+                corpus, n_centroids=n_cents, n_iters=1
+            ),
+        }
+        for step, run in steps.items():
+            calls.clear()
+            run()
+            assert calls and set(calls) == {want}, (n_cents * dim, step, calls)
 
 
 # ---------------------------------------------------------------------------
@@ -298,7 +374,7 @@ def test_pq_adc_topk_probe_restricts_candidates_per_query(spark):
     cb = _toy_codebooks()
     cents = [[1.0] + [0.0] * 7, [0.0] * 7 + [1.0]]
     assigned = corpus.withColumn(
-        "cid", sim._nearest_cid(sim._as_double("embedding"), sim._centroid_literal(cents))
+        "cid", F.expr(sim._nearest_cid_sql("`embedding`", sim._centroid_literal_sql(cents)))
     )
     codes = sim.pq_encode(assigned, cb, extra_cols=("cid",)).withColumnRenamed(
         "vec_id", "neighbor_id"
@@ -624,13 +700,16 @@ def test_refine_kernels_agree_and_validate(spark):
 
     corpus = _toy_corpus(spark, n=120)
     seed = [[1.0] + [0.0] * 7, [0.0] * 3 + [1.0] + [0.0] * 4]
-    fold = sim.ivf_refine_centroids(corpus, seed, n_iters=2, kernel="fold")
-    arrow = sim.ivf_refine_centroids(corpus, seed, n_iters=2, kernel="arrow")
+    fold = _lloyd_with(sim._lloyd_round_fold, corpus, 2, 2, seed=seed)
+    arrow = _lloyd_with(sim._lloyd_round_arrow, corpus, 2, 2, seed=seed)
     for fc, ac in zip(fold, arrow):
         for f_x, a_x in zip(fc, ac):
             assert abs(f_x - a_x) < 1e-9
-    with pytest.raises(ValueError, match="kernel"):
-        sim.ivf_refine_centroids(corpus, seed, kernel="bogus")
+    # the public warm start runs the same (fold, 2x8) rounds
+    refined = sim.ivf_refine_centroids(corpus, seed, n_iters=2)
+    for rc, fc in zip(refined, fold):
+        for r_x, f_x in zip(rc, fc):
+            assert abs(r_x - f_x) < 1e-9
     with pytest.raises(ValueError, match="empty"):
         sim.ivf_refine_centroids(corpus, [])
 
@@ -866,3 +945,31 @@ def test_driver_probes_equal_sql_probes_on_edge_cases(spark):
     assert _driver_probes(spark, [(3, None)], cents, 2) == {}
     assert _sql_probes(spark, [(3, None)], cents, 2) == {}
     assert sim._probe_cids(sim._query_matrix([], 4), cents, 2).shape == (0, 2)
+
+
+def test_delete_is_one_job_and_repeated_ids_change_nothing(spark, tmp_path):
+    # the tombstone append is one write job (no distinct shuffle):
+    # every reader dedupes the id set on the driver, so a batch that
+    # repeats ids leaves the same query answers and index_stats as
+    # the deduped batch
+    corpus = _toy_corpus(spark)
+    cents = [[1.0] + [0.0] * 7, [0.0] * 3 + [1.0] + [0.0] * 4, [0.0] * 7 + [1.0]]
+    p_rep, p_once = str(tmp_path / "del_rep"), str(tmp_path / "del_once")
+    rt.build_ann_index(corpus, p_rep, centroids=cents)
+    rt.build_ann_index(corpus, p_once, centroids=cents)
+    dead = corpus.filter(F.col("vec_id") % 5 == 0)
+    repeated = dead.union(dead).union(dead.filter(F.col("vec_id") < 100))
+    assert _count_jobs(spark, lambda: rt.delete_from_index(repeated, p_rep)) == 1
+    rt.delete_from_index(dead, p_once)
+    q = corpus.filter(F.col("vec_id") % 40 == 3)
+
+    def answers(path):
+        rows = rt.query_ann_index(spark, path, q, k=5, n_probe=2).collect()
+        return sorted(map(tuple, rows)), [
+            tuple(r) for r in rt.index_stats(spark, path).collect()
+        ]
+
+    got, want = answers(p_rep), answers(p_once)
+    assert got == want
+    assert sum(r[2] for r in got[1]) == 320  # 400 stored, 80 deleted
+    assert not {r[1] for r in got[0]} & {r.vec_id for r in dead.collect()}

@@ -583,15 +583,21 @@ def test_mine_hard_negatives_shortfall_flag(spark):
 
 
 def test_ivf_train_arrow_matches_fold_training(spark):
-    """The Arrow training kernel reaches the same Lloyd fixed point as
-    the fold kernel: centroids agree to 1e-9 per component on the
-    fixture and downstream assignment is identical (r8 — the training
-    twin of assign_centroids_arrow)."""
+    """The Arrow Lloyd round reaches the same fixed point as the fold
+    round: centroids agree to 1e-9 per component on the fixture and
+    downstream assignment is identical (r8 — the training twin of
+    assign_centroids_arrow)."""
     import numpy as np
 
     corpus = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    # 8 x 64 = 512: the size rule trains with the fold round
     fold = sim.ivf_train_centroids(corpus, n_centroids=8, n_iters=3)
-    arrow = sim.ivf_train_centroids_arrow(corpus, n_centroids=8, n_iters=3)
+    base = corpus.select(
+        F.col("vec_id").alias("id"), sim._as_double("embedding").alias("v")
+    )
+    arrow = sim._seed_centroids(base, 8, None)
+    for _ in range(3):
+        arrow = sim._lloyd_round_arrow(base, arrow)
     assert np.allclose(np.asarray(fold), np.asarray(arrow), atol=1e-9)
     # identical downstream assignments (the thing that matters)
     a1 = sim.assign_centroids_arrow(corpus, fold).select("vec_id", "cid")
@@ -599,24 +605,32 @@ def test_ivf_train_arrow_matches_fold_training(spark):
     assert sorted(map(tuple, a1.collect())) == sorted(map(tuple, a2.collect()))
 
 
-def test_ivf_train_arrow_guards_and_sampling(spark):
+def test_ivf_train_arrow_guards_and_sampling(spark, monkeypatch):
     import pytest
 
     corpus = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     with pytest.raises(ValueError, match="train_fraction"):
-        sim.ivf_train_centroids_arrow(corpus, train_fraction=1.5)
+        sim.ivf_train_centroids(corpus, train_fraction=1.5)
     with pytest.raises(ValueError, match="raise train_fraction"):
-        sim.ivf_train_centroids_arrow(
+        sim.ivf_train_centroids(
             corpus, n_centroids=64, n_iters=1, train_fraction=0.01
         )
-    # sampled training still seeds deterministically and returns k
-    cents = sim.ivf_train_centroids_arrow(
-        corpus, n_centroids=4, n_iters=2, train_fraction=0.5
+    rounds = []
+    real = sim._lloyd_round_arrow
+    monkeypatch.setattr(
+        sim, "_lloyd_round_arrow", lambda b, c: rounds.append(len(c)) or real(b, c)
     )
-    assert len(cents) == 4 and len(cents[0]) == 64
-    # tiny full corpus degrades to corpus size, same as the fold path
-    tiny = corpus.limit(3)
-    assert len(sim.ivf_train_centroids_arrow(tiny, n_centroids=8, n_iters=1)) == 3
+    # 16 x 64 = 1024: sampled training runs the Arrow round, seeds
+    # deterministically and returns k
+    cents = sim.ivf_train_centroids(
+        corpus, n_centroids=16, n_iters=2, train_fraction=0.5
+    )
+    assert len(cents) == 16 and len(cents[0]) == 64 and rounds == [16, 16]
+    # tiny full corpus degrades to corpus size, and the size rule
+    # reads the degraded count (20 x 64 = 1280: still Arrow)
+    tiny = corpus.limit(20)
+    assert len(sim.ivf_train_centroids(tiny, n_centroids=32, n_iters=1)) == 20
+    assert rounds[-1] == 20
 
 
 def test_validate_embeddings_classifies_and_quarantines(spark):
@@ -765,43 +779,32 @@ def test_cosine_prenormed_fixed_bit_identical(spark):
         sim.cosine_prenormed_fixed("va", "vb", F.col("na"), F.col("nb"), 0)
 
 
-def test_nearest_cid_sql_matches_column_path(spark):
-    # r15 one-parse class: the SQL-built argmax/probe expressions must
-    # be value-identical to the Column-composed twins, including exact
-    # dot ties (argmax keeps the SMALLER cid in both) and negatives.
+def test_nearest_cid_sql_ties_negatives_and_zero(spark):
+    # the SQL-built argmax/probe expressions on the edge cases: exact
+    # dot ties (argmax keeps the SMALLER cid), all-negative dots and
+    # a zero vector; the driver-side numpy probes agree.
+    import numpy as np
+
     cents = [[1.0, 0.0], [0.0, 1.0], [1.0, 0.0]]  # cid 2 duplicates cid 0
     rows = [
         (1, [0.9, 0.1]),
         (2, [0.1, 0.9]),
         (3, [0.5, 0.5]),      # exact tie between cid 0/1/2 -> cid 0
-        (4, [-1.0, -2.0]),    # all dots negative
+        (4, [-1.0, -2.0]),    # all dots negative -> best is cid 0
         (5, [0.0, 0.0]),      # zero vector: dot 0 everywhere -> cid 0
     ]
     df = spark.createDataFrame(rows, "id INT, v ARRAY<DOUBLE>")
-    col_cid = sim._nearest_cid(F.col("v"), sim._centroid_literal(cents))
-    sql_cid = F.expr(sim._nearest_cid_sql("`v`", sim._centroid_literal_sql(cents)))
-    got = df.select("id", col_cid.alias("a"), sql_cid.alias("b")).collect()
-    for r in got:
-        assert r.a == r.b, (r.id, r.a, r.b)
-    assert {r.id: r.a for r in got}[3] == 0  # tie -> smallest cid
-
-    probes_col = F.slice(
-        F.sort_array(
-            F.transform(
-                sim._centroid_literal(cents),
-                lambda ce: F.struct(
-                    (-sim.dot(F.col("v"), ce["cv"])).alias("d"),
-                    ce["cid"].alias("cid"),
-                ),
-            )
-        ),
-        1,
-        2,
-    )
-    pc = F.transform(probes_col, lambda p: p["cid"])
-    ps = F.expr(sim._probe_cids_sql("`v`", sim._centroid_literal_sql(cents), 2))
-    for r in df.select(pc.alias("a"), ps.alias("b")).collect():
-        assert list(r.a) == list(r.b)
+    lit = sim._centroid_literal_sql(cents)
+    got = df.select(
+        "id",
+        F.expr(sim._nearest_cid_sql("`v`", lit)).alias("cid"),
+        F.expr(sim._probe_cids_sql("`v`", lit, 2)).alias("probes"),
+    ).orderBy("id").collect()
+    assert [r.cid for r in got] == [0, 1, 0, 0, 0]
+    want_probes = [[0, 2], [1, 0], [0, 1], [0, 2], [0, 1]]
+    assert [list(r.probes) for r in got] == want_probes
+    qm = np.asarray([v for _, v in rows], dtype=np.float64)
+    assert sim._probe_cids(qm, cents, 2).tolist() == want_probes
 
 
 def test_cosine_fixed_dim_cap_falls_back_to_fold(spark):
