@@ -66,17 +66,13 @@ def ingest_batch(
     )
     exact_ok = exact_ok.drop("content_hash")
 
-    batch_bands = dd._minhash_band_rows(
-        exact_ok,
-        text_col,
-        id_col,
-        params["num_hashes"],
-        n_bands,
-        params["shingle_n"],
-        params["seed"],
-    ).select(F.col("id").alias("new_id"), "band", "bucket")
+    batch_bands = dd._minhash_band_rows(exact_ok, text_col, id_col, **params).select(
+        F.col("id").alias("new_id"), "band", "bucket"
+    )
+    # tombstoned docs neither reject a batch doc nor count toward the
+    # bucket cap, exactly as in minhash_index_query
     index_bands = dd._cap_buckets(
-        spark.read.parquet(minhash_index_path).select(
+        dd._live_band_rows(spark, minhash_index_path).select(
             F.col("id").alias("index_id"), "band", "bucket"
         ),
         ["band", "bucket"],

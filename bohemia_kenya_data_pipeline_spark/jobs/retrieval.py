@@ -13,8 +13,10 @@ partition-pruned-read contract as ``write_history_partition``).
 Centroids persist in a sidecar dataset next to the index so a query
 job needs no training state — the index directory is self-describing.
 Sidecars (centroids, PQ codebooks, tombstones) are metadata-sized: each
-call reads them once on the driver (:func:`_read_sidecar`, pyarrow on
-local paths — no Spark job) and hands them to the plan as literals.
+call reads them once on the driver (``tombstones.read_sidecar``,
+pyarrow on local paths — no Spark job) and hands them to the plan as
+literals. Deletes, their mask and compaction are the shared tombstone
+lifecycle of ``operators.tombstones``.
 
 Query results are IDENTICAL to :func:`..operators.similarity.ivf_topk`
 with the same centroids/n_probe (exact-parity golden): the pruned scan
@@ -24,14 +26,12 @@ the stored vectors is deterministic.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators import similarity as sim
-from ..operators.skipping import _local_root, _swap_in, _walk_local_files
+from ..operators import tombstones as tb
+from ..operators.skipping import _fs, _swap_in
 from ..session import local_df, parquet_scan, _local_footer_schema
 
 
@@ -46,7 +46,7 @@ def _write_centroids(
 ) -> None:
     """Finish a (re)written index: drop tombstones left by the index it
     replaced and write the centroid sidecar."""
-    _drop_tombstones(spark, index_path)
+    tb.clear(spark, index_path)
     local_df(
         spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
@@ -81,38 +81,9 @@ def build_ann_index(
     return centroids
 
 
-def _read_sidecar(spark: SparkSession, path: str, ddl: str) -> list[tuple] | None:
-    """Rows of a metadata-sized sidecar dataset, or ``None`` when it
-    does not exist. A local path (the ``skipping._local_root`` seam
-    that ``session.parquet_scan`` uses) is read in-process with
-    pyarrow: no Spark job and no footer-inference pass. Hidden files
-    and directories (``_SUCCESS``, ``.crc``, ``_temporary``) are
-    skipped, as Spark's file index skips them. Any other filesystem
-    takes one explicit-schema (``ddl``) Spark read."""
-    names = T.StructType.fromDDL(ddl).fieldNames()
-    local = _local_root(path, spark)
-    if local is None:
-        jvm = spark.sparkContext._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        if not p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p):
-            return None
-        return [tuple(r) for r in spark.read.schema(ddl).parquet(path).collect()]
-    if not os.path.isdir(local):
-        return None
-    import pyarrow.parquet as pq
-
-    rows: list[tuple] = []
-    for f, _, _ in sorted(_walk_local_files(local)):
-        if any(p.startswith(("_", ".")) for p in os.path.relpath(f, local).split(os.sep)):
-            continue
-        t = pq.read_table(f, columns=names)
-        rows.extend(zip(*(t.column(n).to_pylist() for n in names)))
-    return rows
-
-
 def load_ann_centroids(spark: SparkSession, index_path: str) -> list[list[float]]:
     """Centroids from the index sidecar, in cid order."""
-    rows = _read_sidecar(
+    rows = tb.read_sidecar(
         spark, _centroid_sidecar(index_path), "cid INT, cv ARRAY<DOUBLE>"
     )
     if rows is None:
@@ -149,7 +120,7 @@ def query_ann_index(
         .collect()
     )
     cids = sorted(r.cid for r in probed)
-    scan = _drop_tombstoned(
+    scan = tb.drop_dead(
         parquet_scan(spark, index_path, [("cid", "int")]).filter(
             F.col("cid").isin(cids)
         ),
@@ -167,53 +138,6 @@ def query_ann_index(
     )
 
 
-def _tombstone_sidecar(index_path: str) -> str:
-    # sibling path, NOT inside the index dir (a nested parquet dataset
-    # would be read as index data — same rule as the centroid sidecar)
-    return index_path.rstrip("/") + "__tombstones"
-
-
-def _index_tombstones(
-    spark: SparkSession, index_path: str, id_type: T.DataType
-) -> list | None:
-    """The index's deleted ids as a sorted, distinct driver-side list,
-    or ``None`` when no delete has landed since the last compaction.
-    Tombstones are metadata-sized: :func:`_read_sidecar` reads them
-    with no schema-inference job and no ``distinct()`` shuffle (the
-    set is built here). ``id_type`` is the index's id column type (the
-    explicit schema of a non-local read). NULL ids never match an
-    anti-join, so they are dropped."""
-    rows = _read_sidecar(
-        spark, _tombstone_sidecar(index_path), f"id {id_type.simpleString()}"
-    )
-    if rows is None:
-        return None
-    return sorted({r[0] for r in rows if r[0] is not None})
-
-
-#: "not read yet" marker for the tombstone argument of the helpers
-#: below (``None`` means "read, and there are none")
-_UNREAD = object()
-
-
-def _tombstones_for(spark, index_path: str, scan: DataFrame, id_col: str, tombs):
-    if tombs is _UNREAD:
-        return _index_tombstones(spark, index_path, scan.schema[id_col].dataType)
-    return tombs
-
-
-def _tomb_frame(spark, tombs: list, id_type: T.DataType, name: str) -> DataFrame:
-    """Tombstones as a literal ``(name, __dead)`` frame (``__dead`` = 1)
-    for a broadcast anti-join or live-flag left join."""
-    return local_df(
-        spark,
-        [(i, 1) for i in tombs],
-        T.StructType(
-            [T.StructField(name, id_type), T.StructField("__dead", T.IntegerType())]
-        ),
-    )
-
-
 def delete_from_index(
     deleted: DataFrame, index_path: str, id_col: str = "vec_id"
 ) -> None:
@@ -221,8 +145,9 @@ def delete_from_index(
     rewriting it: append their ids to a tombstone sidecar that the
     query paths anti-join before scoring — the vector-index face of
     the reference's batch DELETE semantics
-    (``processing_utils.R:335-400``), mirroring
-    ``dedup.minhash_index_delete``. The cid partitions are untouched
+    (``processing_utils.R:335-400``). The tombstone lifecycle is
+    ``operators.tombstones``, the one ``dedup.minhash_index_delete``
+    also runs. The cid partitions are untouched
     (no 100 TB rewrite per delete batch); :func:`compact_index` folds
     tombstones into the stored rows on a cadence. Re-admitting a
     deleted id via ``extend_ann_index`` / ``extend_ivfpq_index``
@@ -230,62 +155,8 @@ def delete_from_index(
     must not coexist with the re-added one), so extension stays exact
     in every case and delta-sized in the steady state. Ids are
     appended as given, one write job: every reader dedupes the
-    metadata-sized set on the driver (:func:`_index_tombstones`)."""
-    deleted.select(F.col(id_col).alias("id")).write.mode("append").parquet(
-        _tombstone_sidecar(index_path)
-    )
-
-
-def _flag_tombstoned(df: DataFrame, spark, id_col: str, tombs) -> DataFrame:
-    """``df`` plus ``__dead`` (1 for a tombstoned id, else NULL): a
-    broadcast left join against the literal tombstone frame."""
-    if not tombs:
-        return df.withColumn("__dead", F.lit(None).cast("int"))
-    dead = _tomb_frame(spark, tombs, df.schema[id_col].dataType, id_col)
-    return df.join(F.broadcast(dead), id_col, "left")
-
-
-def _drop_tombstoned(
-    scan: DataFrame, spark, index_path: str, id_col: str, tombs=_UNREAD
-) -> DataFrame:
-    """``scan`` minus the tombstoned ids: a broadcast anti-join against
-    the literal tombstone frame. ``tombs`` is a list already read this
-    call (or ``None``); left out, it is read here."""
-    tombs = _tombstones_for(spark, index_path, scan, id_col, tombs)
-    if not tombs:
-        return scan
-    dead = _tomb_frame(spark, tombs, scan.schema[id_col].dataType, id_col)
-    return scan.join(F.broadcast(dead), id_col, "anti")
-
-
-def _compact_if_readmitting(new_rows: DataFrame, index_path: str, id_col: str) -> None:
-    """An append batch containing a currently-tombstoned id is a
-    RE-ADMISSION: the id's stale stored row is still in the cid
-    partitions, and appending beside it would put two rows behind one
-    id (stale embedding included). Compact first — the stale rows and
-    the tombstones are physically folded away, then the append lands
-    clean, so extended == rebuilt holds in every case. The check is
-    one broadcast semi-join over the delta (tombstones are
-    metadata-sized); the index-sized rewrite is paid ONLY when a
-    batch actually re-admits, so the steady-state ingest path stays
-    delta-sized."""
-    spark = new_rows.sparkSession
-    id_type = new_rows.schema[id_col].dataType
-    tombs = _index_tombstones(spark, index_path, id_type)
-    if not tombs:
-        return
-    dead = _tomb_frame(spark, tombs, id_type, id_col)
-    if new_rows.select(id_col).join(F.broadcast(dead), id_col, "semi").count():
-        _compact(spark, index_path, id_col, tombs)
-
-
-def _drop_tombstones(spark: SparkSession, index_path: str) -> None:
-    """Delete the tombstone sidecar, if any: after a compaction folded
-    it in, and when a rebuilt index starts clean (tombstones from a
-    previous index at the same path must not hide the new corpus)."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(_tombstone_sidecar(index_path))
-    p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(p, True)
+    metadata-sized set on the driver (``tombstones.read``)."""
+    tb.append(deleted, index_path, id_col)
 
 
 def compact_index(
@@ -297,19 +168,7 @@ def compact_index(
     IVF-PQ code layout, whose columns pass through untouched) and
     drop the tombstone sidecar. Run on a cadence, like any lakehouse
     vacuum, so query-time anti-join cost stays bounded."""
-    _compact(spark, index_path, id_col, _UNREAD)
-
-
-def _compact(spark: SparkSession, index_path: str, id_col: str, tombs) -> None:
-    scan = parquet_scan(spark, index_path, [("cid", "int")])
-    tombs = _tombstones_for(spark, index_path, scan, id_col, tombs)
-    if tombs is None:
-        return
-    rows = _drop_tombstoned(scan, spark, index_path, id_col, tombs)
-    stage = index_path.rstrip("/") + "__stage"
-    rows.write.mode("overwrite").partitionBy("cid").parquet(stage)
-    _swap_in(spark, index_path, stage)
-    _drop_tombstones(spark, index_path)
+    tb.compact(spark, index_path, "cid", id_col)
 
 
 def index_stats(
@@ -325,13 +184,13 @@ def index_stats(
     metadata-sized frame (C = n_centroids), never over index rows.
     Works on both layouts: plain ANN and IVF-PQ store the same
     (id, cid) spine."""
-    return _index_stats(spark, index_path, id_col, _UNREAD)
+    return _index_stats(spark, index_path, id_col, tb.UNREAD)
 
 
 def _index_stats(spark: SparkSession, index_path: str, id_col: str, tombs) -> DataFrame:
     scan = parquet_scan(spark, index_path, [("cid", "int")])
-    tombs = _tombstones_for(spark, index_path, scan, id_col, tombs)
-    scan = _flag_tombstoned(scan.select(id_col, "cid"), spark, id_col, tombs)
+    tombs = tb.resolve(spark, index_path, scan, id_col, tombs)
+    scan = tb.flag(scan.select(id_col, "cid"), spark, id_col, tombs)
     per = scan.groupBy("cid").agg(
         F.count(F.lit(1)).alias("stored_rows"),
         (F.count(F.lit(1)) - F.count("__dead")).alias("live_rows"),
@@ -370,7 +229,7 @@ def index_ingest_drift(
     mirroring ``stats.population_stability``)."""
     return _ingest_drift(
         spark, index_path, new_rows, load_ann_centroids(spark, index_path),
-        _UNREAD, vec_col, id_col, eps,
+        tb.UNREAD, vec_col, id_col, eps,
     )
 
 
@@ -430,17 +289,14 @@ def retrain_index(
     sibling swap (Spark cannot overwrite a path it is reading), the
     same mechanics as :func:`compact_index`. Returns the refined
     centroids."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    cb = jvm.org.apache.hadoop.fs.Path(_codebook_sidecar(index_path))
-    if cb.getFileSystem(conf).exists(cb):
+    if _is_pq_layout(spark, index_path):
         raise ValueError(
             "retrain_index works on the plain ANN layout; IVF-PQ codes "
             "are lossy — rebuild the compressed index from the corpus "
             "with build_ivfpq_index(centroids=...) instead"
         )
     centroids = load_ann_centroids(spark, index_path)
-    live = _drop_tombstoned(
+    live = tb.drop_dead(
         parquet_scan(spark, index_path, [("cid", "int")]).select(id_col, vec_col),
         spark,
         index_path,
@@ -562,27 +418,12 @@ def _maintain_tick(
         "compacted": False,
     }
     scan = parquet_scan(spark, index_path, [("cid", "int")])
-    tombs = _index_tombstones(spark, index_path, scan.schema[id_col].dataType)
+    tombs = tb.read(spark, index_path, scan.schema[id_col].dataType)
     if new_rows is not None:
-        # idempotency guard: ids already LIVE in the index are not a
-        # delta. A tombstoned id still passes (flagged ``__dead``) —
-        # the batch re-admits it, and compacts first, below.
-        flagged = _flag_tombstoned(new_rows, spark, id_col, tombs)
-        live = F.col("__dead").isNull() & (F.col(id_col) == F.col("__stored_id"))
-        delta = flagged.join(
-            scan.select(F.col(id_col).alias("__stored_id")), live, "anti"
+        delta, n_delta, n_readmit = tb.live_delta(
+            new_rows, scan.select(id_col), id_col, tombs
         )
-        # eager localCheckpoint: the delta's plan READS the index, and
-        # the steps below REWRITE it (retrain swap, compaction,
-        # append) — a lazy delta would re-list deleted files mid-tick.
-        # Materializing the delta-sized batch cuts that lineage once;
-        # its row and re-admission counts are observed on that pass.
-        counts = Observation()
-        delta = delta.observe(
-            counts, F.count(F.lit(1)).alias("rows"), F.count("__dead").alias("readmit")
-        ).localCheckpoint(eager=True).drop("__dead")
-        n_delta, n_readmit = counts.get["rows"], counts.get["readmit"]
-        report["ingested_rows"] = int(n_delta)
+        report["ingested_rows"] = n_delta
         if n_delta:
             centroids = load_ann_centroids(spark, index_path)
             drift = _ingest_drift(
@@ -600,22 +441,17 @@ def _maintain_tick(
                     tombs, n_readmit = None, 0
             if n_readmit:
                 # re-admission: fold the stale rows away before the
-                # append (see _compact_if_readmitting)
-                _compact(spark, index_path, id_col, tombs)
+                # append (see tombstones.compact_if_readmitting)
+                tb.compact(spark, index_path, "cid", id_col, tombs)
                 tombs = None
             codebooks = load_pq_codebooks(spark, index_path) if pq_layout else None
             _append(delta, index_path, centroids, codebooks, vec_col, id_col)
             report["extended"] = True
     ids = parquet_scan(spark, index_path, [("cid", "int")]).select(id_col)
-    stored, dead = (
-        _flag_tombstoned(ids, spark, id_col, tombs)
-        .agg(F.count(F.lit(1)), F.count("__dead"))
-        .collect()[0]
-    )
-    share = float(stored - dead) / float(stored) if stored else 1.0
+    share = tb.live_share(ids, id_col, tombs)
     report["live_share"] = round(share, 6)
     if share < min_live_share and not report.get("retrained"):
-        _compact(spark, index_path, id_col, tombs)
+        tb.compact(spark, index_path, "cid", id_col, tombs)
         report["compacted"] = True
     return report
 
@@ -661,7 +497,7 @@ def extend_ann_index(
     data distribution drifts from them — rebuild (or re-train + 
     re-bucket) on a cadence informed by the drift gates
     (``stats.population_stability``, embedding drift)."""
-    _compact_if_readmitting(new_rows, index_path, id_col)
+    tb.compact_if_readmitting(new_rows, index_path, "cid", id_col)
     centroids = load_ann_centroids(new_rows.sparkSession, index_path)
     _append(new_rows, index_path, centroids, None, vec_col, id_col)
 
@@ -675,9 +511,16 @@ def _codebook_sidecar(index_path: str) -> str:
     return index_path.rstrip("/") + "__codebooks"
 
 
+def _is_pq_layout(spark: SparkSession, index_path: str) -> bool:
+    """Whether ``index_path`` holds the IVF-PQ layout: only that layout
+    has a codebook sidecar."""
+    _, fs, p = _fs(spark, _codebook_sidecar(index_path))
+    return fs.exists(p)
+
+
 def load_pq_codebooks(spark: SparkSession, index_path: str) -> list[list[list[float]]]:
     """Codebooks from the IVF-PQ index sidecar, ``[m][k][sub_dim]``."""
-    rows = _read_sidecar(
+    rows = tb.read_sidecar(
         spark, _codebook_sidecar(index_path), "m INT, k INT, cw ARRAY<DOUBLE>"
     )
     if rows is None:
@@ -773,7 +616,7 @@ def extend_ivfpq_index(
     column iff the index already does, so a two-stage re-rank keeps
     working after extension."""
     spark = new_rows.sparkSession
-    _compact_if_readmitting(new_rows, index_path, id_col)
+    tb.compact_if_readmitting(new_rows, index_path, "cid", id_col)
     _append(
         new_rows, index_path, load_ann_centroids(spark, index_path),
         load_pq_codebooks(spark, index_path), vec_col, id_col,
@@ -800,7 +643,7 @@ def query_ivfpq_index(
 
     Everything metadata-sized is resolved on the driver, once per
     call: the centroid, codebook and tombstone sidecars are read
-    without a Spark job on local paths (:func:`_read_sidecar`), the
+    without a Spark job on local paths (``tombstones.read_sidecar``), the
     query batch is collected once (guarded at 10k), and its probed
     cids and ADC lookup tables are computed there (bit-identical to
     the SQL probe order) and enter the plan as literals — the probed
@@ -839,7 +682,7 @@ def query_ivfpq_index(
         spark, rows, queries.schema[id_col].dataType, codebooks,
         probe=(centroids, n_probe), with_vec=bool(rerank),
     )
-    scan = _drop_tombstoned(
+    scan = tb.drop_dead(
         scan.filter(F.col("cid").isin(cids)), spark, index_path, id_col
     )
     cols = [F.col(id_col).alias("neighbor_id"), "pq_code", "cid"]

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import parquet_scan
+from . import skipping as _skp
+from . import tombstones as tb
 from .text import bind_once, tokens
 
 #: Mersenne prime 2^31-1 — classic universal-hash modulus.
@@ -800,86 +802,79 @@ def minhash_index_write(
     The index stores (id, band, bucket) partitioned by ``band``, so a
     probe reads only the band partitions it joins (partition pruning)
     and the stored signature parameters MUST be reused by the probe —
-    they are written to ``path/_params.json`` and validated by
-    :func:`minhash_index_query`.
+    they are written to the ``<path>__params.json`` sidecar and
+    validated by :func:`minhash_index_query`.
     """
-    import json as _json
-
     rows = _minhash_band_rows(df, text_col, id_col, num_hashes, bands, shingle_n, seed)
     rows.write.mode(mode).partitionBy("band").parquet(path)
-    spark0 = df.sparkSession
-    if mode == "overwrite" and _hadoop_exists(
-        spark0, _minhash_tombstone_path(path)
-    ):
-        # a rebuilt index starts clean: tombstones from a previous
-        # index at the same path must not hide the new corpus
-        jvm0 = spark0.sparkContext._jvm
-        conf0 = spark0.sparkContext._jsc.hadoopConfiguration()
-        tp = jvm0.org.apache.hadoop.fs.Path(_minhash_tombstone_path(path))
-        tp.getFileSystem(conf0).delete(tp, True)
-    params = {"num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n, "seed": seed}
     spark = df.sparkSession
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path + "/_params.json")
-    out = p.getFileSystem(conf).create(p, True)
-    out.write(bytearray(_json.dumps(params).encode()))
-    out.close()
+    if mode == "overwrite":
+        tb.clear(spark, path)
+    _skp._write_json(
+        spark,
+        _minhash_params_path(path),
+        {"num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n, "seed": seed},
+    )
+
+
+def _minhash_params_path(index_path: str) -> str:
+    # a sibling of the index directory, like every index sidecar: a
+    # file inside it would be dropped by a compaction's staged swap
+    return index_path.rstrip("/") + "__params.json"
 
 
 def read_minhash_index_params(spark, index_path: str) -> dict:
-    """Signature parameters a minhash index was written with
-    (the _params.json sidecar) — the single source probes must use."""
-    import json as _json
+    """Signature parameters a minhash index was written with (the
+    ``__params.json`` sidecar) — the single source probes must use.
 
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(index_path + "/_params.json")
-    stream = p.getFileSystem(conf).open(p)
-    try:
-        return _json.loads(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
-
-
-def _minhash_tombstone_path(index_path: str) -> str:
-    # sibling path, NOT inside the index dir (a nested parquet dataset
-    # would be read as band-row data — same rule as the manifest
-    # sidecars in operators/skipping.py)
-    return index_path.rstrip("/") + "__tombstones"
+    An index written before the sidecar existed keeps them in
+    ``<path>/_params.json``, inside the index directory, where a
+    compaction's swap drops them: the first read copies them to the
+    sidecar. Every minhash operation that compacts reads the params
+    first."""
+    legacy = index_path.rstrip("/") + "/_params.json"
+    sidecar = _minhash_params_path(index_path)
+    jvm, fs, p = _skp._fs(spark, legacy)
+    if fs.exists(p) and not fs.exists(jvm.org.apache.hadoop.fs.Path(sidecar)):
+        _skp._write_json(spark, sidecar, _skp._read_json(spark, legacy))
+    return _skp._read_json(spark, sidecar)
 
 
-def _hadoop_exists(spark, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
+def _append_band_rows(
+    docs: DataFrame, index_path: str, params: dict, text_col: str, id_col: str
+) -> None:
+    _minhash_band_rows(docs, text_col, id_col, **params).write.mode(
+        "append"
+    ).partitionBy("band").parquet(index_path)
+
+
+def _live_band_rows(spark, index_path: str) -> DataFrame:
+    """The index's (id, band, bucket) rows minus tombstoned ids —
+    exactly the rows of an index built over the surviving corpus, so
+    deleted docs neither surface as candidates nor count toward bucket
+    caps."""
+    rows = parquet_scan(spark, index_path, [("band", "int")]).select(
+        "id", "band", "bucket"
+    )
+    return tb.drop_dead(rows, spark, index_path, "id")
 
 
 def minhash_index_delete(
     deleted: DataFrame, index_path: str, id_col: str = "doc_id"
 ) -> None:
     """Remove documents from a minhash index WITHOUT rewriting it:
-    append their ids to a tombstone sidecar that
-    :func:`minhash_index_query` anti-joins before candidate
-    generation — the same soft-delete shape as the reference's batch
+    append their ids to the tombstone sidecar that every read of the
+    index masks — the same soft-delete shape as the reference's batch
     DELETE resolutions (``processing_utils.R:335-400``, C1 semantics),
-    where the mutation list is tiny next to the corpus. The index's
-    band partitions are untouched (no 100 TB rewrite for a
-    delete batch); :func:`minhash_index_compact` folds tombstones
-    into the band rows when they accumulate, and re-admitting a
-    deleted id via :func:`minhash_index_extend` compacts first so the
-    stale band rows never coexist with the fresh signature."""
-    deleted.select(F.col(id_col).alias("id")).distinct().write.mode(
-        "append"
-    ).parquet(_minhash_tombstone_path(index_path))
-
-
-def _minhash_tombstones(spark, index_path: str) -> DataFrame | None:
-    path = _minhash_tombstone_path(index_path)
-    if not _hadoop_exists(spark, path):
-        return None
-    return spark.read.parquet(path).select("id").distinct()
+    where the mutation list is tiny next to the corpus. The band
+    partitions are untouched (no 100 TB rewrite for a delete batch);
+    :func:`minhash_index_compact` folds tombstones into the band rows
+    when they accumulate, and re-admitting a deleted id via
+    :func:`minhash_index_extend` compacts first so the stale band rows
+    never coexist with the fresh signature. One write job; the
+    lifecycle is ``operators.tombstones``, shared with the vector
+    index."""
+    tb.append(deleted, index_path, id_col)
 
 
 def minhash_index_compact(spark, index_path: str) -> None:
@@ -889,34 +884,8 @@ def minhash_index_compact(spark, index_path: str) -> None:
     cadence, like any lakehouse vacuum, so query-time anti-join cost
     stays bounded. After compaction the index is byte-equivalent in
     content to one built over the surviving corpus."""
-    from .skipping import _swap_in
-
-    tomb = _minhash_tombstones(spark, index_path)
-    if tomb is None:
-        return
-    rows = parquet_scan(spark, index_path, [("band", "int")]).join(
-        F.broadcast(tomb), "id", "anti"
-    )
-    # partitionBy-preserving staged swap: write to a stage sibling,
-    # then replace (Spark cannot overwrite a path it is reading)
-    stage = index_path.rstrip("/") + "__stage"
-    rows.write.mode("overwrite").partitionBy("band").parquet(stage)
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(index_path).getFileSystem(conf)
-    params_tmp = read_minhash_index_params(spark, index_path)
-    _swap_in(spark, index_path, stage)
-    # the staged swap drops the sidecar params file — restore it
-    import json as _json
-
-    p = jvm.org.apache.hadoop.fs.Path(index_path + "/_params.json")
-    out = p.getFileSystem(conf).create(p, True)
-    out.write(bytearray(_json.dumps(params_tmp).encode()))
-    out.close()
-    fs.delete(
-        jvm.org.apache.hadoop.fs.Path(_minhash_tombstone_path(index_path)),
-        True,
-    )
+    read_minhash_index_params(spark, index_path)
+    tb.compact(spark, index_path, "band", "id")
 
 
 def minhash_index_stats(spark, index_path: str) -> DataFrame:
@@ -928,25 +897,24 @@ def minhash_index_stats(spark, index_path: str) -> DataFrame:
     the cap in the LIVE index means probes are silently truncating
     that neighborhood; time to re-shingle or re-band). One scan of the
     (id, band, bucket) rows — text is never stored, so this is always
-    index-metadata-sized I/O — two map-side-combined groupBys, and the
-    result is B rows (B = bands)."""
-    rows = parquet_scan(spark, index_path, [("band", "int")]).select(
-        "id", "band", "bucket"
-    )
-    tomb = _minhash_tombstones(spark, index_path)
-    live = rows if tomb is None else rows.join(F.broadcast(tomb), "id", "anti")
-    stored = rows.groupBy("band").agg(F.count(F.lit(1)).alias("stored_rows"))
-    per_bucket = live.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    lv = per_bucket.groupBy("band").agg(
-        F.sum("n").alias("live_rows"),
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("n").alias("max_bucket"),
+    index-metadata-sized I/O — with the tombstones flagged by a
+    broadcast join, then two map-side-combined groupBys in sequence;
+    the result is B rows (B = bands)."""
+    scan = parquet_scan(spark, index_path, [("band", "int")])
+    tombs = tb.read(spark, index_path, scan.schema["id"].dataType)
+    rows = tb.flag(scan.select("id", "band", "bucket"), spark, "id", tombs)
+    per_bucket = rows.groupBy("band", "bucket").agg(
+        F.count(F.lit(1)).alias("stored"),
+        (F.count(F.lit(1)) - F.count("__dead")).alias("n"),
     )
     return (
-        stored.join(lv, "band", "left")
-        .fillna(0, subset=["live_rows", "n_buckets", "max_bucket"])
+        per_bucket.groupBy("band")
+        .agg(
+            F.sum("stored").alias("stored_rows"),
+            F.sum("n").alias("live_rows"),
+            F.count(F.when(F.col("n") > 0, 1)).alias("n_buckets"),
+            F.max("n").alias("max_bucket"),
+        )
         .select(
             F.col("band").cast("int").alias("band"),
             "stored_rows",
@@ -968,12 +936,13 @@ def maintain_minhash_index(
     id_col: str = "doc_id",
 ) -> dict:
     """One idempotent maintenance tick for the near-dup index — the
-    minhash face of ``jobs.retrieval.maintain_vector_index``: sign and
-    append ``new_docs`` (delta-sized; re-admissions compact first via
-    :func:`minhash_index_extend`'s own guard), then read
-    :func:`minhash_index_stats` ONCE and act on it — tombstone debt
-    past ``min_live_share`` → :func:`minhash_index_compact`; a live
-    bucket past ``max_live_bucket`` → FLAGGED, not fixed (a hot bucket
+    minhash face of ``jobs.retrieval.maintain_vector_index``, on the
+    same tombstone steps (``operators.tombstones``): sign and append
+    ``new_docs`` (delta-sized; a batch that re-admits a tombstoned id
+    compacts first), then read the post-ingest live share and act on
+    it — tombstone debt past ``min_live_share`` → compaction; a live
+    bucket past ``max_live_bucket`` (read from
+    :func:`minhash_index_stats`) → FLAGGED, not fixed (a hot bucket
     means probes with that cap silently truncate the neighborhood; the
     fix is re-shingling or re-banding, a corpus-sized rebuild the
     caller schedules — this tick never pays more than one index-sized
@@ -993,42 +962,32 @@ def maintain_minhash_index(
         "compacted": False,
         "hot_buckets": 0,
     }
+    # read before any compaction (see read_minhash_index_params)
+    params = read_minhash_index_params(spark, index_path)
+    scan = parquet_scan(spark, index_path, [("band", "int")])
+    tombs = tb.read(spark, index_path, scan.schema["id"].dataType)
     if new_docs is not None:
-        live_ids = parquet_scan(spark, index_path, [("band", "int")]).select(
-            F.col("id").alias(id_col)
+        delta, n_delta, n_readmit = tb.live_delta(
+            new_docs, scan.select("id"), id_col, tombs
         )
-        tomb = _minhash_tombstones(spark, index_path)
-        if tomb is not None:
-            # tombstoned ids still count as a delta: re-admission runs
-            # through minhash_index_extend's compact-first guard
-            live_ids = live_ids.join(
-                F.broadcast(tomb.select(F.col("id").alias(id_col))),
-                id_col, "anti",
-            )
-        # eager localCheckpoint: the delta's plan READS the index, and
-        # a re-admitting extend REWRITES it (compact-first guard) — a
-        # lazy delta would re-list deleted files mid-tick
-        delta = new_docs.join(
-            live_ids.distinct(), id_col, "anti"
-        ).localCheckpoint(eager=True)
-        n_delta = delta.count()
-        report["ingested_docs"] = int(n_delta)
+        report["ingested_docs"] = n_delta
         if n_delta:
-            minhash_index_extend(
-                delta, index_path, text_col=text_col, id_col=id_col
-            )
+            if n_readmit:
+                tb.compact(spark, index_path, "band", "id", tombs)
+                tombs = None
+            _append_band_rows(delta, index_path, params, text_col, id_col)
             report["extended"] = True
-    stats = minhash_index_stats(spark, index_path).collect()  # B rows
-    stored = sum(r.stored_rows for r in stats)
-    live = sum(r.live_rows for r in stats)
-    share = live / stored if stored else 1.0
+    ids = parquet_scan(spark, index_path, [("band", "int")]).select("id")
+    share = tb.live_share(ids, "id", tombs)
     report["live_share"] = round(share, 6)
     if max_live_bucket is not None:
         report["hot_buckets"] = sum(
-            1 for r in stats if r.max_bucket > max_live_bucket
+            1
+            for r in minhash_index_stats(spark, index_path).collect()  # B rows
+            if r.max_bucket > max_live_bucket
         )
     if share < min_live_share:
-        minhash_index_compact(spark, index_path)
+        tb.compact(spark, index_path, "band", "id", tombs)
         report["compacted"] = True
     return report
 
@@ -1048,34 +1007,19 @@ def minhash_index_query(
 
     Scale shape: sign ONLY the batch, equi-join on (band, bucket)
     against the parquet index (band partitions prune; the bucket join
-    shuffles batch-sized data against an index scan). The optional
+    shuffles batch-sized data against an index scan; tombstoned docs
+    are masked by a broadcast anti-join). The optional
     ``max_bucket_size`` caps INDEX-side bucket membership, same
     contract as the batch generators.
     """
     spark = new_docs.sparkSession
     params = read_minhash_index_params(spark, index_path)
-    batch_rows = _minhash_band_rows(
-        new_docs,
-        text_col,
-        id_col,
-        params["num_hashes"],
-        params["bands"],
-        params["shingle_n"],
-        params["seed"],
-    ).select(F.col("id").alias("new_id"), "band", "bucket")
-    index = parquet_scan(spark, index_path, [("band", "int")]).select(
+    batch_rows = _minhash_band_rows(new_docs, text_col, id_col, **params).select(
+        F.col("id").alias("new_id"), "band", "bucket"
+    )
+    index = _live_band_rows(spark, index_path).select(
         F.col("id").alias("index_id"), "band", "bucket"
     )
-    tomb = _minhash_tombstones(spark, index_path)
-    if tomb is not None:
-        # deleted docs stop surfacing as candidates AND stop counting
-        # toward bucket caps — exactly as if the index had been built
-        # over the surviving corpus (golden-tested)
-        index = index.join(
-            F.broadcast(tomb.select(F.col("id").alias("index_id"))),
-            "index_id",
-            "anti",
-        )
     index = _cap_buckets(index, ["band", "bucket"], "index_id", max_bucket_size)
     return (
         batch_rows.join(index, ["band", "bucket"])
@@ -1098,40 +1042,24 @@ def minhash_index_extend(
     exactly once, ever. The composition is exact: an index extended
     batch-by-batch holds the same band rows as one built over the
     concatenated corpus (same signature params by construction —
-    golden-tested), so later probes see identical candidates. Mirrors
-    ``extend_ann_index``'s append-only contract, without the drift
+    golden-tested), so later probes see identical candidates. The same
+    append-only contract as ``extend_ann_index``, without the drift
     caveat: minhash signatures have no trained state to go stale.
 
-    Re-admitting a previously deleted id triggers
-    :func:`minhash_index_compact` first (the document is back in the
-    corpus, so it must surface as a candidate again — but its STALE
-    band rows must not coexist with the fresh signature, or a changed
-    text would keep matching through its old buckets and the
+    Re-admitting a previously deleted id compacts first
+    (``tombstones.compact_if_readmitting``: the document is back in
+    the corpus, so it must surface as a candidate again — but its
+    STALE band rows must not coexist with the fresh signature, or a
+    changed text would keep matching through its old buckets and the
     duplicate rows would double-count toward ``max_bucket_size``
-    caps). The detection is one broadcast semi-join over the delta;
+    caps). The detection is one broadcast semi-join over the batch;
     the index-sized compaction is paid only when a batch actually
     re-admits, so the steady-state ingest loop stays delta-sized."""
-    spark = new_docs.sparkSession
-    params = read_minhash_index_params(spark, index_path)
-    tomb = _minhash_tombstones(spark, index_path)
-    if tomb is not None:
-        n_readds = (
-            new_docs.select(F.col(id_col).alias("id"))
-            .join(F.broadcast(tomb), "id", "semi")
-            .count()
-        )
-        if n_readds:
-            minhash_index_compact(spark, index_path)
-    rows = _minhash_band_rows(
-        new_docs,
-        text_col,
-        id_col,
-        params["num_hashes"],
-        params["bands"],
-        params["shingle_n"],
-        params["seed"],
+    params = read_minhash_index_params(new_docs.sparkSession, index_path)
+    tb.compact_if_readmitting(
+        new_docs.select(F.col(id_col).alias("id")), index_path, "band", "id"
     )
-    rows.write.mode("append").partitionBy("band").parquet(index_path)
+    _append_band_rows(new_docs, index_path, params, text_col, id_col)
 
 
 # ---------------------------------------------------------------------------

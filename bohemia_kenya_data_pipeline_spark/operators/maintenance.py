@@ -516,10 +516,7 @@ def _maintain_table_layout(
         # finding)
         zparams = _skp._read_json(spark, _zparams_path(path))
         if zparams.get("pending_add") or zparams.get("pending_remove"):
-            _zrecover(spark, path, zparams)
-            zparams["pending_add"] = []
-            zparams["pending_remove"] = []
-            _skp._write_json(spark, _zparams_path(path), zparams)
+            _zreplay(spark, path, zparams)
             zrecovered = True
 
     files = _list_parquet_file_infos(spark, path)
@@ -700,11 +697,7 @@ def _zorder_fold(
     from . import skipping as _skp
 
     params = _skp._read_json(spark, _zparams_path(path))
-    recovered = _zrecover(spark, path, params)
-    if recovered:
-        params["pending_add"] = []
-        params["pending_remove"] = []
-        _skp._write_json(spark, _zparams_path(path), params)
+    recovered = _zreplay(spark, path, params)
 
     gens = _zgenerations(params)
     report = {
@@ -729,6 +722,30 @@ def _zorder_fold(
         for f, s in _list_parquet_file_infos(spark, path)
     }
     victim_bytes = sum(sizes.get(n, 0) for n in victims)
+    report["n_new_tiles"] = _zrecluster(
+        spark, path, params, victims, victim_bytes, gens[:1]
+    )
+    report["folded"] = True
+    return report
+
+
+def _zrecluster(
+    spark: SparkSession,
+    path: str,
+    params: dict,
+    victims: list[str],
+    victim_bytes: int,
+    keep_gens: list[list[str]],
+) -> int:
+    """The swap behind :func:`zorder_extend` and :func:`zorder_fold`:
+    re-cluster the ``victims`` files into fresh z-tiles in the stage
+    dir, journal the swap intent and the post-swap state in the
+    sidecar (``pending_add``/``pending_remove``, the file set, and the
+    generations ``keep_gens`` plus the new tiles) BEFORE any visible
+    mutation, then replay the journal and clear it. Returns the
+    number of new tiles."""
+    from . import skipping as _skp
+
     n_tiles = max(1, math.ceil(victim_bytes / params["target_file_bytes"]))
     stage_dir = path.rstrip("/") + "__zstage"
     ddf = spark.read.parquet(*[path.rstrip("/") + "/" + n for n in victims])
@@ -740,19 +757,28 @@ def _zorder_fold(
         os.path.basename(f)
         for f, _ in _list_parquet_file_infos(spark, stage_dir)
     )
-    # journal the swap intent + the post-fold state, THEN mutate
     params["pending_add"] = staged
     params["pending_remove"] = victims
-    params["files"] = sorted(set(gens[0]) | set(staged))
-    params["generations"] = [gens[0], staged]
+    params["files"] = sorted(set(params["files"]) - set(victims) | set(staged))
+    params["generations"] = keep_gens + [staged]
     _skp._write_json(spark, _zparams_path(path), params)
-    _zrecover(spark, path, params)
-    params["pending_add"] = []
-    params["pending_remove"] = []
-    _skp._write_json(spark, _zparams_path(path), params)
-    report["folded"] = True
-    report["n_new_tiles"] = len(staged)
-    return report
+    _zreplay(spark, path, params)
+    return len(staged)
+
+
+def _zreplay(spark: SparkSession, path: str, params: dict) -> bool:
+    """Replay the sidecar's swap journal (:func:`_zrecover`) and clear
+    it: the file set and generations it was written with already
+    describe the post-swap state. Returns whether the replay moved or
+    deleted a file."""
+    from . import skipping as _skp
+
+    acted = _zrecover(spark, path, params)
+    if params.get("pending_add") or params.get("pending_remove"):
+        params["pending_add"] = []
+        params["pending_remove"] = []
+        _skp._write_json(spark, _zparams_path(path), params)
+    return acted
 
 
 def _zrecover(spark: SparkSession, path: str, params: dict) -> bool:
@@ -811,20 +837,13 @@ def _zorder_extend(spark: SparkSession, path: str) -> dict:
     from . import skipping as _skp
 
     params = _skp._read_json(spark, _zparams_path(path))
-    recovered = _zrecover(spark, path, params)
-    if recovered:
-        # journal replayed: the files list in the sidecar already
-        # reflects the intended post-swap state (written at commit)
-        params["pending_add"] = []
-        params["pending_remove"] = []
-        _skp._write_json(spark, _zparams_path(path), params)
+    recovered = _zreplay(spark, path, params)
 
     current = {
         os.path.basename(f): s
         for f, s in _list_parquet_file_infos(spark, path)
     }
-    known = set(params["files"])
-    delta = sorted(set(current) - known)
+    delta = sorted(set(current) - set(params["files"]))
     report = {
         "extended": False,
         "recovered": recovered,
@@ -833,35 +852,11 @@ def _zorder_extend(spark: SparkSession, path: str) -> dict:
     }
     if not delta:
         return report
-
-    delta_paths = [path.rstrip("/") + "/" + name for name in delta]
-    ddf = spark.read.parquet(*delta_paths)
     delta_bytes = sum(current[name] for name in delta)
-    n_tiles = max(1, math.ceil(delta_bytes / params["target_file_bytes"]))
-    stage_dir = path.rstrip("/") + "__zstage"
-    keyed = ddf.withColumn(
-        "__z", zorder_value(params["col_a"], params["col_b"], params["bits"])
+    report["n_new_tiles"] = _zrecluster(
+        spark, path, params, delta, delta_bytes, _zgenerations(params)
     )
-    cluster_write(keyed, stage_dir, ["__z"], n_tiles, drop_cols=["__z"])
-    staged = sorted(
-        os.path.basename(f)
-        for f, _ in _list_parquet_file_infos(spark, stage_dir)
-    )
-    # journal the swap intent + the post-swap file set, THEN mutate
-    # (generation list derives from the PRE-extend state, so read it
-    # before the files field is overwritten)
-    prior_gens = _zgenerations(params)
-    params["pending_add"] = staged
-    params["pending_remove"] = delta
-    params["files"] = sorted((known | set(staged)))
-    params["generations"] = prior_gens + [staged]
-    _skp._write_json(spark, _zparams_path(path), params)
-    _zrecover(spark, path, params)
-    params["pending_add"] = []
-    params["pending_remove"] = []
-    _skp._write_json(spark, _zparams_path(path), params)
     report["extended"] = True
-    report["n_new_tiles"] = len(staged)
     return report
 
 

@@ -995,7 +995,6 @@ def vector_ingest_sink(
     index_path: str,
     checkpoint: str,
     dim: int,
-    layout: str = "ann",
     quarantine_path: str | None = None,
     trail_path: str | None = None,
     psi_rebuild: float = 0.25,
@@ -1012,8 +1011,8 @@ def vector_ingest_sink(
     their ``embedding_status``, never in the index), then (b) handed
     to the layout's maintenance tick
     (:func:`~..jobs.retrieval.maintain_vector_index` for the plain
-    layout, :func:`~..jobs.retrieval.maintain_pq_index` for IVF-PQ),
-    which owns the whole policy: live-id anti-join (idempotency), PSI
+    layout, :func:`~..jobs.retrieval.maintain_pq_index` for IVF-PQ —
+    the index with a codebook sidecar), which owns the whole policy: live-id anti-join (idempotency), PSI
     drift gate, delta-sized extend, live-share vacuum.
 
     Delivery contract: foreachBatch is at-least-once, and the tick's
@@ -1046,8 +1045,6 @@ def vector_ingest_sink(
     never self-retrains — drift is REPORTED (``rebuild_from_corpus``)
     for the caller to schedule as a corpus job.
     """
-    if layout not in ("ann", "pq"):
-        raise ValueError(f"layout must be 'ann' or 'pq', got {layout!r}")
     from ..jobs import retrieval as _rt
     from ..operators import similarity as _sim
 
@@ -1065,7 +1062,7 @@ def vector_ingest_sink(
             vec_col=vec_col,
             id_col=id_col,
         )
-        if layout == "pq":
+        if _rt._is_pq_layout(spark, index_path):
             report = _rt.maintain_pq_index(spark, index_path, **kwargs)
         else:
             report = _rt.maintain_vector_index(spark, index_path, **kwargs)

@@ -10,10 +10,14 @@ those paths are covered by the driver oracle checks).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from bohemia_kenya_data_pipeline_spark.operators import dedup
+from bohemia_kenya_data_pipeline_spark.operators import tombstones as tb
+from tests.conftest import count_jobs
 
 
 def _adversarial_df(spark, n_hot=200, n_normal=30):
@@ -237,7 +241,7 @@ def test_minhash_index_extend_resurrects_and_compact_folds(spark, tmp_path):
     assert (100, 1) in got
     import os as _os
 
-    assert not _os.path.exists(dedup._minhash_tombstone_path(path))
+    assert not _os.path.exists(tb.sidecar_path(path))
     rebuilt = str(tmp_path / "mh_rebuilt")
     dedup.minhash_index_write(corpus, rebuilt, num_hashes=8, bands=4)
 
@@ -254,7 +258,7 @@ def test_minhash_index_extend_resurrects_and_compact_folds(spark, tmp_path):
     dedup.minhash_index_compact(spark, path)
     import os
 
-    assert not os.path.exists(dedup._minhash_tombstone_path(path))
+    assert not os.path.exists(tb.sidecar_path(path))
     ids = {r.id for r in spark.read.parquet(path).select("id").collect()}
     assert 1 not in ids and 2 in ids
     assert dedup.read_minhash_index_params(spark, path)["num_hashes"] == 8
@@ -346,7 +350,7 @@ def test_maintain_minhash_index_policy_ticks(spark, tmp_path):
     r2 = dedup.maintain_minhash_index(spark, path)
     assert not r2["extended"] and r2["compacted"]
     assert abs(r2["live_share"] - 0.6) < 1e-9
-    assert not os.path.exists(dedup._minhash_tombstone_path(path))
+    assert not os.path.exists(tb.sidecar_path(path))
     assert spark.read.parquet(path).count() == 12
     # healthy tick: no-op
     r3 = dedup.maintain_minhash_index(spark, path, max_live_bucket=10)
@@ -364,4 +368,128 @@ def test_maintain_minhash_index_policy_ticks(spark, tmp_path):
     )
     assert r4["ingested_docs"] == 1 and r4["extended"]
     assert spark.read.parquet(path).count() == 12  # compact dropped 4, re-added 4
-    assert not os.path.exists(dedup._minhash_tombstone_path(path))
+    assert not os.path.exists(tb.sidecar_path(path))
+
+
+_DOCS = [
+    (i, f"document number {i % 40} with some shared words {i}") for i in range(200)
+]
+
+
+def _band_rows(spark, p):
+    return sorted(
+        map(tuple, spark.read.parquet(p).select("id", "band", "bucket").collect())
+    )
+
+
+def test_minhash_index_delete_is_one_job(spark, tmp_path):
+    # the delete appends the ids as given; readers dedupe them on the
+    # driver, so a batch with repeated ids hides the same docs
+    docs = spark.createDataFrame(_DOCS, "doc_id BIGINT, text STRING")
+    path = str(tmp_path / "mh_del_jobs")
+    dedup.minhash_index_write(docs, path, num_hashes=16, bands=4)
+    dead = docs.filter(F.col("doc_id") % 10 == 3)
+    n = count_jobs(
+        spark, lambda: dedup.minhash_index_delete(dead.unionByName(dead), path)
+    )
+    assert n == 1, n
+    probe = docs.withColumn("doc_id", F.col("doc_id") + 1000)
+    hits = {r.index_id for r in dedup.minhash_index_query(probe, path).collect()}
+    assert hits and not hits & {r.doc_id for r in dead.collect()}
+
+
+def test_maintain_minhash_index_readmitting_tick_job_count(spark, tmp_path):
+    # a tick whose batch re-admits a tombstoned class: the tombstones are
+    # read on the driver, the delta's row and re-admission counts are
+    # observed on its checkpoint pass, the compaction runs once and the
+    # live share is one aggregate (25 jobs when the tick re-read and
+    # re-counted through minhash_index_extend and minhash_index_stats)
+    docs = spark.createDataFrame(_DOCS, "doc_id BIGINT, text STRING")
+    path = str(tmp_path / "mh_tick_jobs")
+    dedup.minhash_index_write(docs, path, num_hashes=16, bands=4)
+    back = docs.filter(F.col("doc_id") % 10 == 3)
+    dedup.minhash_index_delete(back, path)
+    report = {}
+    n = count_jobs(
+        spark,
+        lambda: report.update(dedup.maintain_minhash_index(spark, path, back)),
+    )
+    assert report["ingested_docs"] == 20 and report["extended"]
+    assert report["live_share"] == 1.0 and not report["compacted"]
+    assert n <= 9, n
+    assert not os.path.exists(tb.sidecar_path(path))
+    rebuilt = str(tmp_path / "mh_tick_rebuilt")
+    dedup.minhash_index_write(docs, rebuilt, num_hashes=16, bands=4)
+    assert _band_rows(spark, path) == _band_rows(spark, rebuilt)
+
+
+def test_minhash_compact_crash_after_swap_recovers(spark, tmp_path, monkeypatch):
+    """A compaction that dies right after its swap leaves an index that
+    probes as the surviving corpus, and re-running the compaction
+    converges on the survivors' index."""
+    from bohemia_kenya_data_pipeline_spark.operators import skipping as skp
+
+    docs = spark.createDataFrame(_DOCS[:30], "doc_id BIGINT, text STRING")
+    dead = docs.filter(F.col("doc_id") % 5 == 0)
+    path = str(tmp_path / "mh_crash")
+    dedup.minhash_index_write(docs, path, num_hashes=8, bands=4)
+    dedup.minhash_index_delete(dead, path)
+    survivors = str(tmp_path / "mh_crash_survivors")
+    dedup.minhash_index_write(
+        docs.join(dead, "doc_id", "anti"), survivors, num_hashes=8, bands=4
+    )
+    real = skp._swap_in
+
+    def swap_then_crash(*args):
+        real(*args)
+        raise OSError("crash after the swap")
+
+    monkeypatch.setattr(skp, "_swap_in", swap_then_crash)
+    with pytest.raises(OSError, match="crash after the swap"):
+        dedup.minhash_index_compact(spark, path)
+    monkeypatch.undo()
+
+    probe = docs.withColumn("doc_id", F.col("doc_id") + 1000)
+
+    def candidates(p):
+        return set(map(tuple, dedup.minhash_index_query(probe, p).collect()))
+
+    want = candidates(survivors)
+    assert want and candidates(path) == want
+    dedup.minhash_index_compact(spark, path)
+    assert not os.path.exists(tb.sidecar_path(path))
+    assert _band_rows(spark, path) == _band_rows(spark, survivors)
+    assert candidates(path) == want
+
+
+def test_minhash_index_with_params_inside_probes_extends_and_compacts(
+    spark, tmp_path
+):
+    """An index written with its params inside the index directory
+    (``_params.json``, the layout before the sibling sidecar) still
+    probes, extends and compacts; the compaction keeps the params."""
+    import shutil
+
+    docs = spark.createDataFrame(_DOCS[:30], "doc_id BIGINT, text STRING")
+    base = docs.filter(F.col("doc_id") < 20)
+    path = str(tmp_path / "mh_legacy")
+    dedup.minhash_index_write(base, path, num_hashes=8, bands=4)
+    shutil.move(path + "__params.json", path + "/_params.json")
+    fresh = str(tmp_path / "mh_legacy_fresh")
+    dedup.minhash_index_write(base, fresh, num_hashes=8, bands=4)
+    probe = docs.withColumn("doc_id", F.col("doc_id") + 1000)
+
+    def candidates(p):
+        return set(map(tuple, dedup.minhash_index_query(probe, p).collect()))
+
+    assert candidates(path) == candidates(fresh)
+    for p in (path, fresh):
+        dedup.minhash_index_extend(docs.filter(F.col("doc_id") >= 20), p)
+        dedup.minhash_index_delete(docs.filter(F.col("doc_id") % 5 == 0), p)
+        dedup.minhash_index_compact(spark, p)
+    assert not os.path.exists(path + "/_params.json")
+    assert dedup.read_minhash_index_params(spark, path) == (
+        dedup.read_minhash_index_params(spark, fresh)
+    )
+    assert _band_rows(spark, path) == _band_rows(spark, fresh)
+    assert candidates(path) == candidates(fresh)

@@ -235,6 +235,40 @@ def test_ingest_batch_end_to_end(spark, tmp_path):
         jobs.ingest_batch(batch, store, index, min_band_agreement=0.0)
 
 
+def test_ingest_batch_ignores_tombstoned_index_docs(spark, tmp_path):
+    """A deleted index doc no longer rejects its near-duplicates: the
+    ingest probe reads the index through the tombstone mask, exactly
+    as minhash_index_query does."""
+    from pyspark.sql import functions as F
+
+    from bohemia_kenya_data_pipeline_spark import jobs
+    from bohemia_kenya_data_pipeline_spark.operators import dedup as dd
+
+    corpus = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog today"),
+            (2, "completely unrelated text about catalyst optimizer rules"),
+        ],
+        ["doc_id", "text"],
+    )
+    index = str(tmp_path / "mh_index_del")
+    dd.minhash_index_write(corpus, index, num_hashes=8, bands=4)
+    dd.minhash_index_delete(corpus.filter(F.col("doc_id") == 1), index)
+    store = corpus.filter(F.col("doc_id") == 2).select(
+        F.md5("text").alias("content_hash")
+    )
+    batch = spark.createDataFrame(
+        [(100, "the quick brown fox jumps over the lazy dog today")],
+        ["doc_id", "text"],
+    )
+    assert dd.minhash_index_query(batch, index).count() == 0
+    accepted, _, new_bands = jobs.ingest_batch(
+        batch, store, index, min_band_agreement=0.25
+    )
+    assert [r.doc_id for r in accepted.collect()] == [100]
+    assert {r.id for r in new_bands.collect()} == {100}
+
+
 def test_gated_ingest_routes_then_gates(spark):
     from bohemia_kenya_data_pipeline_spark import jobs
     from bohemia_kenya_data_pipeline_spark.operators import quality as ql

@@ -212,6 +212,7 @@ def test_index_lifecycle_equals_fresh_build_random(spark, world):
     import tempfile
 
     from bohemia_kenya_data_pipeline_spark.jobs import retrieval as rt
+    from bohemia_kenya_data_pipeline_spark.operators import tombstones as tb
     from bohemia_kenya_data_pipeline_spark.operators import (
         similarity as sim,
     )
@@ -262,7 +263,7 @@ def test_index_lifecycle_equals_fresh_build_random(spark, world):
                 rt.retrain_index(spark, path, n_iters=1)
         # membership + payload: the tombstone-masked stored rows are
         # exactly the tracked survivors, vectors intact
-        stored = rt._drop_tombstoned(
+        stored = tb.drop_dead(
             spark.read.parquet(path).select("vec_id", "embedding"),
             spark,
             path,

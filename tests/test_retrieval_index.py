@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from bohemia_kenya_data_pipeline_spark.jobs import retrieval as rt
 from bohemia_kenya_data_pipeline_spark.operators import similarity as sim
+from bohemia_kenya_data_pipeline_spark.operators import tombstones as tb
 from tests.conftest import count_jobs as _count_jobs
 
 
@@ -517,7 +518,7 @@ def test_extend_readmission_compacts_so_no_duplicate_rows(spark, tmp_path):
     # so no id ever has two rows behind it
     rt.extend_ann_index(doomed, path)
     assert spark.read.parquet(path).count() == 300  # no duplicate rows
-    assert not os.path.exists(rt._tombstone_sidecar(path))
+    assert not os.path.exists(tb.sidecar_path(path))
     got = rt.query_ann_index(spark, path, doomed.limit(1), k=3, n_probe=4)
     # with exhaustive probes the re-added neighbors are queryable
     assert got.count() == 3
@@ -526,7 +527,7 @@ def test_extend_readmission_compacts_so_no_duplicate_rows(spark, tmp_path):
     rt.delete_from_index(corpus.filter(F.col("vec_id") == 1), path)
     fresh = _toy_corpus(spark, n=310).filter(F.col("vec_id") > 300)
     rt.extend_ann_index(fresh, path)
-    assert os.path.exists(rt._tombstone_sidecar(path))
+    assert os.path.exists(tb.sidecar_path(path))
     assert spark.read.parquet(path).count() == 310  # still masked, not folded
 
 
@@ -546,7 +547,7 @@ def test_compact_index_is_query_invisible_and_drops_sidecar(spark, tmp_path):
         map(tuple, rt.query_ann_index(spark, path, queries, k=5, n_probe=2).collect())
     )
     assert before == after  # vacuum changes nothing a query can see
-    assert not os.path.exists(rt._tombstone_sidecar(path))  # sidecar folded
+    assert not os.path.exists(tb.sidecar_path(path))  # sidecar folded
     stored = spark.read.parquet(path)
     assert stored.count() == 400 - 57  # tombstoned rows physically gone
     assert stored.filter(F.col("vec_id") % 7 == 3).count() == 0
@@ -566,7 +567,7 @@ def test_rebuild_at_same_path_clears_stale_tombstones(spark, tmp_path):
     assert got.count() == 5
     import os
 
-    assert not os.path.exists(rt._tombstone_sidecar(path))
+    assert not os.path.exists(tb.sidecar_path(path))
 
 
 def test_index_stats_reports_live_vs_stored_per_cid(spark, tmp_path):
@@ -669,7 +670,7 @@ def test_retrain_index_recenters_on_live_rows_only(spark, tmp_path):
     assert rt.load_ann_centroids(spark, path) == [
         [float(x) for x in c] for c in new_cents
     ]
-    assert not os.path.exists(rt._tombstone_sidecar(path))
+    assert not os.path.exists(tb.sidecar_path(path))
     st = rt.index_stats(spark, path).collect()
     assert all(r.stored_rows == r.live_rows for r in st)
     assert sum(r.stored_rows for r in st) == 150
@@ -757,7 +758,7 @@ def test_maintain_vector_index_policy_ticks(spark, tmp_path):
     r3 = rt.maintain_vector_index(spark, path)
     assert r3["psi"] is None and r3["compacted"]
     assert r3["live_share"] < 0.8
-    assert not os.path.exists(rt._tombstone_sidecar(path))
+    assert not os.path.exists(tb.sidecar_path(path))
     # healthy index: the tick is a no-op
     r4 = rt.maintain_vector_index(spark, path)
     assert r4 == {
@@ -812,7 +813,7 @@ def test_maintain_pq_index_policy_ticks(spark, tmp_path):
     r3 = rt.maintain_pq_index(spark, path)
     assert r3["psi"] is None and r3["compacted"]
     assert r3["live_share"] < 0.8
-    assert not os.path.exists(rt._tombstone_sidecar(path))
+    assert not os.path.exists(tb.sidecar_path(path))
     # healthy index: the tick is a no-op
     r4 = rt.maintain_pq_index(spark, path)
     assert r4 == {
@@ -890,15 +891,15 @@ def test_maintain_pq_index_readmitting_tick_job_count(spark, tmp_path):
 def test_maintain_pq_index_tick_reads_each_sidecar_once(spark, tmp_path, monkeypatch):
     corpus, path = _served_pq_index(spark, tmp_path, "pq_tick_reads")
     reads = []
-    real = rt._read_sidecar
+    real = tb.read_sidecar
     monkeypatch.setattr(
-        rt, "_read_sidecar", lambda s, p, ddl: reads.append(p) or real(s, p, ddl)
+        tb, "read_sidecar", lambda s, p, ddl: reads.append(p) or real(s, p, ddl)
     )
     rt.maintain_pq_index(spark, path, corpus.filter(F.col("vec_id") % 10 == 7))
     # centroids, codebooks and tombstones: each exactly once
     assert sorted(reads) == sorted(
         [rt._centroid_sidecar(path), rt._codebook_sidecar(path),
-         rt._tombstone_sidecar(path)]
+         tb.sidecar_path(path)]
     ), reads
 
 

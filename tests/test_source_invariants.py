@@ -14,6 +14,9 @@ ran by hand, codified so they can't regress silently.
    pattern has a native replacement.
 3. No library code changes session settings (``spark.conf.set``):
    they are set once in ``session.get_spark``.
+4. Only ``operators/tombstones.py`` names the ``__tombstones``
+   sidecar: every index shares its one delete format, mask and
+   compaction.
 """
 
 from __future__ import annotations
@@ -88,3 +91,8 @@ def test_no_library_code_changes_session_conf():
         if re.search(r"\.conf\.(set|unset)\(", line)
     ]
     assert hits == [], f"session conf changed outside get_spark: {hits}"
+
+
+def test_only_the_tombstone_module_names_the_sidecar():
+    hits = [name for name, src in _sources() if "__tombstones" in src]
+    assert hits == ["bohemia_kenya_data_pipeline_spark/operators/tombstones.py"], hits

@@ -1133,11 +1133,10 @@ def test_vector_ingest_sink_replay_is_idempotent(spark, tmp_path):
 
 
 def test_vector_ingest_sink_pq_layout_reports_drift(spark, tmp_path):
-    """layout='pq': the sink extends the compressed index and REPORTS
-    drift (rebuild_from_corpus) instead of retraining — the lossy
-    layout cannot re-derive training vectors (retrieval.py guard)."""
-    import pytest
-
+    """On an IVF-PQ index (told apart by its codebook sidecar) the sink
+    extends the compressed index and REPORTS drift
+    (rebuild_from_corpus) instead of retraining — the lossy layout
+    cannot re-derive training vectors (retrieval.py guard)."""
     from bohemia_kenya_data_pipeline_spark.jobs import retrieval as rt
     from bohemia_kenya_data_pipeline_spark.streaming import events as se
 
@@ -1173,7 +1172,7 @@ def test_vector_ingest_sink_pq_layout_reports_drift(spark, tmp_path):
 
     stream = spark.readStream.schema(schema).parquet(str(src / "*"))
     se.vector_ingest_sink(
-        stream, idx, str(tmp_path / "pq_ck"), dim=4, layout="pq",
+        stream, idx, str(tmp_path / "pq_ck"), dim=4,
         psi_rebuild=0.1, trail_path=trail,
     ).awaitTermination(60)
 
@@ -1183,8 +1182,3 @@ def test_vector_ingest_sink_pq_layout_reports_drift(spark, tmp_path):
     assert not rows[0].retrained  # PQ never self-retrains
     ids = {r.vec_id for r in spark.read.parquet(idx).collect()}
     assert ids == set(range(8)) | {100 + i for i in range(8)}
-
-    with pytest.raises(ValueError, match="layout"):
-        se.vector_ingest_sink(
-            stream, idx, str(tmp_path / "bad_ck"), dim=4, layout="flat"
-        )
